@@ -20,10 +20,19 @@ asks when a dashboard slows down. Correctness does not depend on the layer
 chosen: the cache key proves byte-identical inputs + an identical plan, and
 MV routing is the algebra hash-verified by q239's oracle.
 
-Invalidation is file-version-based end to end: ``apply_changes`` (CDC
-upsert/delete merge) rewrites the table files, which rotates every
-dependent cache fingerprint automatically; MV staleness is the refresh
-contract (``refresh_mv`` for batch, streaming/incremental.py for live).
+Invalidation is file-version-based end to end: ``apply_changes`` folds a
+CDC batch into the table's stored state and commits a new file version,
+which rotates every dependent cache fingerprint automatically; MV
+staleness is the refresh contract (``refresh_mv`` for batch,
+streaming/incremental.py for live).
+
+The fold is ``StreamingCdcApply``'s: latest-wins per key by change order
+over state ∪ batch. The stored state keeps each key's order and op under
+the fixed columns ``_lsn`` / ``_op`` (delete tombstones included; base
+rows carry a NULL order, which every change outranks), so a stale
+re-delivery — a change older than the key's stored one — is a no-op, and
+a delete of an absent key never resurrects a row. ``tables[t]`` is that
+state with tombstones filtered out and the two columns dropped.
 """
 
 from __future__ import annotations
@@ -35,10 +44,21 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from inspectadb_spark.catalog import load_tables
+from inspectadb_spark.operators.cdc import latest_per_key
 from inspectadb_spark.operators.mv import _DEC, AggRequest, GroupingSetMV
 from inspectadb_spark.operators.mv import MVDef, _derivable
 from inspectadb_spark.operators.mv import route as _mv_route
 from inspectadb_spark.operators.result_cache import ResultCache
+from inspectadb_spark.versioned import commit_versioned, read_current
+
+# the stored table state's change-order and op columns (engine-internal)
+_LSN, _OP = "_lsn", "_op"
+
+
+def _live(state: DataFrame) -> DataFrame:
+    """The user-facing table of a stored state: tombstones out, order and
+    op columns dropped."""
+    return state.filter(F.col(_OP) != "d").drop(_LSN, _OP)
 
 
 class Engine:
@@ -65,14 +85,18 @@ class Engine:
         if not os.path.isdir(root):
             return
         for table in os.listdir(root):
-            ptr = os.path.join(root, table, "CURRENT")
-            if table in self.tables and os.path.exists(ptr):
-                with open(ptr) as f:
-                    path = f.read().strip()
-                self.tables[table] = self.spark.read.parquet(path)
-                base = os.path.basename(path)
-                if base.startswith("v"):
-                    self._table_version[table] = int(base[1:])
+            if table in self.tables:
+                self._publish(table)
+
+    def _state_dir(self, table: str) -> str:
+        return os.path.join(self.work_dir, "tables", table)
+
+    def _publish(self, table: str) -> None:
+        """Point ``tables[table]`` at its committed state, if any."""
+        n, path, _ = read_current(self._state_dir(table))
+        if path is not None:
+            self.tables[table] = _live(self.spark.read.parquet(path))
+            self._table_version[table] = n
 
     # -- relational entry points ------------------------------------------
     def table(self, name: str) -> DataFrame:
@@ -376,50 +400,28 @@ class Engine:
                       keys: list[str], order_col: str = "lsn",
                       op_col: str = "op",
                       refresh_dependents: bool = True) -> None:
-        """Apply a CDC change batch to ``table``: fold the changelog to its
-        net effect (latest per key), MERGE into the current table
-        (upsert + delete), and REWRITE the table files copy-on-write under
-        work_dir. The rewrite is the invalidation mechanism: every cached
-        result over this table stops being addressed (new file versions),
-        and dependent MVs are refreshed in the same call by default
-        (``refresh_dependents=False`` defers them — the documented
-        stale-until-refresh mode). The original sf_dir files are never
-        touched (they may be read-only corpus fixtures)."""
-        from inspectadb_spark.operators.cdc import latest_per_key, merge_apply
-
-        net = latest_per_key(changes, keys, order_col)
-        target = self.tables[table]
-        src = net.select(*target.columns, F.col(op_col))
-        merged = merge_apply(
-            target, src, keys,
-            update_cols={c: F.col(f"s.{c}") for c in target.columns
-                         if c not in keys},
-            delete_condition=F.col(f"s.{op_col}") == "d",
-            # a delete for an absent key must NOT resurrect the tombstone
-            # payload as an inserted row (idempotence under at-least-once
-            # re-delivery of an already-applied delete)
-            insert_condition=F.col(f"s.{op_col}") != "d",
-        ).select(*target.columns)
-        # versioned copy-on-write + atomic pointer swap (the DedupRegistry
-        # crash story): NEVER overwrite the files the merge plan is
-        # reading — a mid-write failure must leave the previous version
-        # intact and committed
-        version = self._table_version.get(table, 0) + 1
-        out = os.path.join(self.work_dir, "tables", table, f"v{version}")
-        merged.write.mode("overwrite").parquet(out)
-        ptr = os.path.join(self.work_dir, "tables", table, "CURRENT")
-        tmp = ptr + ".tmp"
-        with open(tmp, "w") as f:
-            f.write(out)
-        os.replace(tmp, ptr)
-        self._table_version[table] = version
-        old = os.path.join(self.work_dir, "tables", table,
-                           f"v{version - 2}")
-        if os.path.exists(old):
-            import shutil
-
-            shutil.rmtree(old, ignore_errors=True)
-        self.tables[table] = self.spark.read.parquet(out)
+        """Apply a CDC change batch to ``table``: fold it into the table's
+        stored state latest-wins per key by ``order_col`` (the module
+        docstring's fold: tombstones kept, so a stale re-delivery or a
+        repeated delete is a no-op), and commit the new state copy-on-write
+        under work_dir (``versioned.commit_versioned``). The new version is
+        the invalidation mechanism: every cached result over this table
+        stops being addressed (new file versions), and dependent MVs are
+        refreshed in the same call by default (``refresh_dependents=False``
+        defers them — the documented stale-until-refresh mode). The first
+        apply seeds the state from the current table; the original sf_dir
+        files are never touched (they may be read-only corpus fixtures)."""
+        live = self.tables[table]
+        _, committed, _ = read_current(self._state_dir(table))
+        state = (self.spark.read.parquet(committed) if committed is not None
+                 else live.select("*", F.lit(None).alias(_LSN),
+                                  F.lit("c").alias(_OP)))
+        batch = changes.select(*live.columns, F.col(order_col).alias(_LSN),
+                               F.col(op_col).alias(_OP))
+        new_state = latest_per_key(state.unionByName(batch), keys, _LSN)
+        commit_versioned(new_state.write.mode("overwrite").parquet,
+                         self._state_dir(table))
+        self._publish(table)
         self.tables[table].createOrReplaceTempView(table)
         if refresh_dependents:
             # rotate dependent summaries too, so MV-routed plans (and the

@@ -26,8 +26,11 @@ def latest_per_key(
     order_col: str = "lsn",
 ) -> DataFrame:
     """Per key, the row with the greatest ``order_col`` — *including* delete
-    tombstones. Streaming state must retain tombstones so a late lower-lsn
-    change cannot resurrect a deleted key (see streaming/cdc_stream.py)."""
+    tombstones; a NULL order ranks below every non-NULL one (DESC NULLS
+    LAST). Folded over stored state ∪ a change batch it is the one CDC
+    apply of ``Engine.apply_changes`` and ``StreamingCdcApply``: the state
+    keeps each key's order and its tombstones, so a late lower-order change
+    cannot overwrite a newer value or resurrect a deleted key."""
     w = Window.partitionBy(*key_cols).orderBy(F.col(order_col).desc())
     return (
         changes.withColumn("_rn", F.row_number().over(w))

@@ -44,64 +44,33 @@ sums regardless of partial-aggregation order.
 from __future__ import annotations
 
 import os
-import shutil
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from inspectadb_spark.versioned import commit_versioned, read_current
+
 _DEC = "decimal(18,6)"
 
 
 # -- crash-safe MV storage ---------------------------------------------------
-# MV refreshes are versioned like engine.apply_changes' table rewrites:
-# each refresh writes a NEW ``path/v{n}`` directory and then atomically
-# swaps ``path/CURRENT`` to it. A crash mid-refresh leaves the previous
-# committed version intact and addressed; a reader that resolved the old
-# pointer keeps its files for one more refresh (one-version grace) — the
-# exact crash window an in-place overwrite left open (ADVICE r04 item 1).
-
-def _read_current(path: str) -> tuple[int, str | None]:
-    """(committed version number, committed dir) — (0, None) if none."""
-    cur = os.path.join(path, "CURRENT")
-    if not os.path.exists(cur):
-        return 0, None
-    with open(cur) as f:
-        v = f.read().strip()
-    d = os.path.join(path, v)
-    try:
-        n = int(v.lstrip("v"))
-    except ValueError:
-        return 0, None
-    return n, (d if os.path.exists(d) else None)
-
+# MV refreshes commit through ``versioned.commit_versioned`` like every other
+# whole-state rewrite: a crash mid-refresh leaves the previous committed
+# version intact and addressed, the exact crash window an in-place
+# overwrite left open (ADVICE r04 item 1).
 
 def resolve_mv_path(path: str) -> str | None:
     """The directory a reader should scan for this MV, or None when no
     refresh has ever committed (route()/answer() then fall back to base —
     a partially written summary is never silently aggregated)."""
-    _, d = _read_current(path)
-    if d is not None:
+    _, d, _ = read_current(path)
+    if d is not None and os.path.exists(d):
         return d
     # legacy in-place layout: only routable once fully committed
     if os.path.exists(os.path.join(path, "_SUCCESS")):
         return path
     return None
-
-
-def _commit_versioned(write_fn, path: str) -> None:
-    """Run ``write_fn(version_dir)`` then swap the CURRENT pointer."""
-    os.makedirs(path, exist_ok=True)
-    n, _ = _read_current(path)
-    out = os.path.join(path, f"v{n + 1}")
-    write_fn(out)
-    tmp = os.path.join(path, "CURRENT.tmp")
-    with open(tmp, "w") as f:
-        f.write(f"v{n + 1}")
-    os.replace(tmp, os.path.join(path, "CURRENT"))
-    old = os.path.join(path, f"v{n - 1}")
-    if os.path.exists(old):
-        shutil.rmtree(old, ignore_errors=True)
 
 
 @dataclass(frozen=True)
@@ -125,8 +94,8 @@ class MVDef:
     def store(self, base: DataFrame, path: str) -> None:
         """Materialize to parquet (the batch refresh; streaming refresh is
         streaming/incremental.py feeding the same path). Versioned + atomic
-        pointer swap: see ``_commit_versioned``."""
-        _commit_versioned(
+        pointer swap: see ``commit_versioned``."""
+        commit_versioned(
             lambda d: self.build(base).write.mode("overwrite").parquet(d),
             path)
 
@@ -434,7 +403,7 @@ class GroupingSetMV:
         return cube.filter(F.col("grouping_id").isin(masks))
 
     def store(self, base: DataFrame, path: str) -> None:
-        _commit_versioned(
+        commit_versioned(
             lambda d: (self.build(base).write.mode("overwrite")
                        .partitionBy("grouping_id").parquet(d)),
             path)

@@ -52,11 +52,14 @@ def get_session(app_name: str = "inspectadb-spark", master: str | None = None,
                 **overrides: str) -> SparkSession:
     """Build (or fetch) the engine SparkSession.
 
-    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (env, default 32) for
-    local runs; on a cluster, leave ``master`` unset in spark-submit context.
+    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` for local runs, or,
+    with the env var unset, to one worker thread per CPU this process may
+    run on (its scheduler affinity); on a cluster, leave ``master`` unset in
+    spark-submit context.
     """
     if master is None:
-        cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+        cpus = os.environ.get("SPARK_GRAFT_CPUS",
+                              str(len(os.sched_getaffinity(0))))
         master = f"local[{cpus}]"
     builder = SparkSession.builder.appName(app_name).master(master)
     spark = configure(builder, **overrides).getOrCreate()

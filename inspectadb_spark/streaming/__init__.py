@@ -15,7 +15,6 @@ from inspectadb_spark.streaming.windows import (
 )
 from inspectadb_spark.streaming.cdc_stream import StreamingCdcApply
 from inspectadb_spark.streaming.incremental import IncrementalAggregate, StreamingCms
-from inspectadb_spark.streaming.tws_cdc import streaming_cdc_latest
 
 __all__ = [
     "tumbling_agg",
@@ -25,5 +24,4 @@ __all__ = [
     "StreamingCdcApply",
     "IncrementalAggregate",
     "StreamingCms",
-    "streaming_cdc_latest",
 ]

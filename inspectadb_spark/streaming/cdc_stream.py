@@ -2,12 +2,12 @@
 
 ``foreachBatch`` + the batch ``apply_changelog`` builder: each micro-batch
 merges the new changes into the persisted state (latest-wins by lsn,
-deletes dropped). State versions are written to alternating directories and
-atomically re-pointed, so a crash mid-batch leaves the previous consistent
-version readable — the same pattern a MERGE INTO against a transactional
-table format (Delta/Iceberg) gives for free; with such a sink the body of
-``_merge_batch`` becomes a single ``mergeInto`` (whenMatched update/delete,
-whenNotMatched insert).
+tombstones kept in state, dropped from ``current_state``). State versions
+commit through ``versioned.commit_versioned``, so a crash mid-batch leaves
+the previous consistent version readable — the same pattern a MERGE INTO
+against a transactional table format (Delta/Iceberg) gives for free; with
+such a sink the body of ``_merge_batch`` becomes a single ``mergeInto``
+(whenMatched update/delete, whenNotMatched insert).
 
 Idempotent under micro-batch re-delivery: re-applying any prefix of changes
 cannot change the latest-wins outcome (max-lsn row per key is stable).
@@ -16,11 +16,11 @@ cannot change the latest-wins outcome (max-lsn row per key is stable).
 from __future__ import annotations
 
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 
 from inspectadb_spark.operators.cdc import latest_per_key
+from inspectadb_spark.versioned import commit_versioned, read_current
 
 
 class StreamingCdcApply:
@@ -40,31 +40,21 @@ class StreamingCdcApply:
         self.order_col = order_col
         self.op_col = op_col
         os.makedirs(state_dir, exist_ok=True)
-        # Resume version numbering from the committed pointer (same fix as
-        # IncrementalAggregate): a fresh process restarting at 0 would
-        # overwrite the very version CURRENT points at — Spark refuses to
-        # overwrite a path it is lazily reading — and orphan prior versions.
-        # No batch-id guard is needed here: latest-wins by lsn IS idempotent
-        # under re-delivery.
-        self._version = 0
-        if os.path.exists(self._ptr()):
-            with open(self._ptr()) as f:
-                committed = os.path.basename(f.read().strip())
-            if committed.startswith("v"):
-                self._version = int(committed[1:])
 
     # -- state bookkeeping ---------------------------------------------------
-    def _ptr(self) -> str:
-        return os.path.join(self.state_dir, "CURRENT")
+    @property
+    def _version(self) -> int:
+        """Committed state version, read from the pointer: a restarted
+        process resumes numbering instead of overwriting the version CURRENT
+        points at (Spark refuses to overwrite a path it is lazily reading).
+        No batch-id guard is needed: latest-wins by lsn IS idempotent under
+        re-delivery."""
+        return read_current(self.state_dir)[0]
 
     def _state_raw(self) -> DataFrame | None:
         """Internal state: latest row per key INCLUDING delete tombstones."""
-        ptr = self._ptr()
-        if not os.path.exists(ptr):
-            return None
-        with open(ptr) as f:
-            path = f.read().strip()
-        return self.spark.read.parquet(path)
+        _, path, _ = read_current(self.state_dir)
+        return None if path is None else self.spark.read.parquet(path)
 
     def current_state(self) -> DataFrame | None:
         """User-facing view: tombstones filtered out."""
@@ -76,25 +66,16 @@ class StreamingCdcApply:
         return raw.filter(F.col(self.op_col) != "d")
 
     def _merge_batch(self, batch: DataFrame, batch_id: int) -> None:
-        # keep only the latest change per key within the batch, then union
-        # with prior state and re-apply latest-wins. The per-key max-lsn rows
-        # in state carry their lsn, so cross-batch ordering stays correct.
+        # union the batch with prior state and keep the max-lsn row per key
+        # (Engine.apply_changes folds the same way): state rows carry their
+        # lsn, so a re-delivered older change loses to the stored one
         if batch.isEmpty():
             return  # idle trigger: don't rewrite the whole state for a no-op
         state = self._state_raw()
         merged_input = batch if state is None else state.unionByName(batch)
         new_state = latest_per_key(merged_input, self.key_cols, self.order_col)
-        self._version += 1
-        out = os.path.join(self.state_dir, f"v{self._version}")
-        new_state.write.mode("overwrite").parquet(out)
-        tmp = self._ptr() + ".tmp"
-        with open(tmp, "w") as f:
-            f.write(out)
-        os.replace(tmp, self._ptr())
-        # GC the version before last (last is still referenced until replace)
-        old = os.path.join(self.state_dir, f"v{self._version - 2}")
-        if os.path.exists(old):
-            shutil.rmtree(old, ignore_errors=True)
+        commit_versioned(new_state.write.mode("overwrite").parquet,
+                         self.state_dir)
 
     # -- entry point ---------------------------------------------------------
     def start(self, change_stream: DataFrame, checkpoint_dir: str,

@@ -10,10 +10,9 @@ re-aggregation: count (merge: sum), sum (sum — routed through
 DECIMAL(18,6) so merge order can never change the value), min (min),
 max (max). avg is derived as sum/count in the reader view, never stored.
 
-State versions are written to alternating directories and atomically
-re-pointed (same crash story as ``StreamingCdcApply``); on a transactional
-table format the body of ``_merge_batch`` becomes a single MERGE INTO with
-additive updates. Merge cost per batch is O(|groups| + |batch partials|) —
+State versions commit through ``versioned.commit_versioned`` (the same
+crash story as ``StreamingCdcApply``); on a transactional table format the
+body of ``_merge_batch`` becomes a single MERGE INTO with additive updates. Merge cost per batch is O(|groups| + |batch partials|) —
 independent of stream history length; state size is the group count.
 
 Idempotence: unlike latest-wins CDC apply, additive merges are NOT
@@ -29,10 +28,11 @@ replay-into-existing-state run must not be suppressed).
 from __future__ import annotations
 
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from inspectadb_spark.versioned import commit_versioned, read_current
 
 # kind -> (partial agg sql over source expr, merge agg sql over partial col)
 _KINDS = {
@@ -82,30 +82,43 @@ class IncrementalAggregate:
         self.measures = list(measures)
         os.makedirs(state_dir, exist_ok=True)
         self._checkpoint: str | None = None
-        # Resume version numbering from the committed pointer: a fresh
-        # process starting at 0 would overwrite the very version CURRENT
-        # still points at (Spark refuses to overwrite a path it is reading
-        # from) and would orphan the prior run's version directories.
-        self._version = 0
-        committed = self._read_ptr()
-        if committed is not None:
-            base = os.path.basename(committed[0])
-            if base.startswith("v"):
-                self._version = int(base[1:])
 
-    # -- state bookkeeping (same version-pointer pattern as StreamingCdcApply)
-    def _ptr(self) -> str:
-        return os.path.join(self.state_dir, "CURRENT")
+    # -- state bookkeeping (versioned.commit_versioned, the pointer trailer
+    # carrying the (checkpoint, batch_id) that produced each version)
+    @property
+    def _version(self) -> int:
+        """Committed state version, read from the pointer: a restarted
+        process resumes numbering instead of overwriting the version CURRENT
+        still points at (Spark refuses to overwrite a path it is reading)."""
+        return read_current(self.state_dir)[0]
 
     def _read_ptr(self) -> tuple[str, str | None, int | None] | None:
         """(state_path, source_checkpoint, last_batch_id) or None."""
-        if not os.path.exists(self._ptr()):
+        _, path, trailer = read_current(self.state_dir)
+        if path is None:
             return None
-        with open(self._ptr()) as f:
-            lines = f.read().strip().splitlines()
-        if len(lines) >= 3:
-            return lines[0], lines[1], int(lines[2])
-        return lines[0], None, None
+        if len(trailer) >= 2:
+            return path, trailer[0], int(trailer[1])
+        return path, None, None
+
+    def _applied(self, batch_id: int) -> bool:
+        """Whether ``batch_id`` of this checkpoint is already inside the
+        committed state: the crash-window re-delivery between the pointer
+        swap and Spark's checkpoint commit. Double-applying an additive
+        merge would permanently inflate counts/sums."""
+        committed = self._read_ptr()
+        return (
+            committed is not None
+            and self._checkpoint is not None
+            and committed[1] == self._checkpoint
+            and committed[2] is not None
+            and batch_id <= committed[2]
+        )
+
+    def _commit(self, new_state: DataFrame, batch_id: int) -> None:
+        commit_versioned(new_state.write.mode("overwrite").parquet,
+                         self.state_dir,
+                         (self._checkpoint or "", str(batch_id)))
 
     def table(self) -> DataFrame | None:
         """The current aggregate table (finalized columns)."""
@@ -135,17 +148,7 @@ class IncrementalAggregate:
         return merged_in.groupBy(*self.key_exprs).agg(*merges)
 
     def _merge_batch(self, batch: DataFrame, batch_id: int) -> None:
-        committed = self._read_ptr()
-        if (
-            committed is not None
-            and self._checkpoint is not None
-            and committed[1] == self._checkpoint
-            and committed[2] is not None
-            and batch_id <= committed[2]
-        ):
-            # crash-window re-delivery: this batch is already inside the
-            # committed state — double-applying an additive merge would
-            # permanently inflate counts/sums
+        if self._applied(batch_id):
             return
         if batch.isEmpty():
             # an idle trigger (watermark advance, availableNow drain tail)
@@ -155,17 +158,7 @@ class IncrementalAggregate:
         partial = self._partial(batch)
         state = self.table()
         merged_in = partial if state is None else state.unionByName(partial)
-        new_state = self._merge_states(merged_in)
-        self._version += 1
-        out = os.path.join(self.state_dir, f"v{self._version}")
-        new_state.write.mode("overwrite").parquet(out)
-        tmp = self._ptr() + ".tmp"
-        with open(tmp, "w") as f:
-            f.write(f"{out}\n{self._checkpoint or ''}\n{batch_id}")
-        os.replace(tmp, self._ptr())
-        old = os.path.join(self.state_dir, f"v{self._version - 2}")
-        if os.path.exists(old):
-            shutil.rmtree(old, ignore_errors=True)
+        self._commit(self._merge_states(merged_in), batch_id)
 
     def start(self, stream: DataFrame, checkpoint_dir: str,
               available_now: bool = False, **options):
@@ -405,14 +398,7 @@ class StreamingSprt(IncrementalAggregate):
     def _merge_batch(self, batch: DataFrame, batch_id: int) -> None:
         from pyspark.sql import Window
 
-        committed = self._read_ptr()
-        if (
-            committed is not None
-            and self._checkpoint is not None
-            and committed[1] == self._checkpoint
-            and committed[2] is not None
-            and batch_id <= committed[2]
-        ):
+        if self._applied(batch_id):
             return
         if batch.isEmpty():
             return
@@ -492,19 +478,9 @@ class StreamingSprt(IncrementalAggregate):
                 "max_ord")
             # keys silent in this batch carry over untouched
             carried = state.join(upd.select(k), k, "anti")
-            new_state = carried.unionByName(upd)
-            self._version += 1
-            out = os.path.join(self.state_dir, f"v{self._version}")
-            new_state.write.mode("overwrite").parquet(out)
+            self._commit(carried.unionByName(upd), batch_id)
         finally:
             j.unpersist()
-        tmp = self._ptr() + ".tmp"
-        with open(tmp, "w") as f:
-            f.write(f"{out}\n{self._checkpoint or ''}\n{batch_id}")
-        os.replace(tmp, self._ptr())
-        old = os.path.join(self.state_dir, f"v{self._version - 2}")
-        if os.path.exists(old):
-            shutil.rmtree(old, ignore_errors=True)
 
     def readout(self) -> DataFrame | None:
         """(key, n_events, n_at_decision, decision, llr_readout) — the
@@ -562,14 +538,7 @@ class StreamingXmr(IncrementalAggregate):
     def _merge_batch(self, batch: DataFrame, batch_id: int) -> None:
         from pyspark.sql import Window
 
-        committed = self._read_ptr()
-        if (
-            committed is not None
-            and self._checkpoint is not None
-            and committed[1] == self._checkpoint
-            and committed[2] is not None
-            and batch_id <= committed[2]
-        ):
+        if self._applied(batch_id):
             return
         if batch.isEmpty():
             return
@@ -623,19 +592,9 @@ class StreamingXmr(IncrementalAggregate):
                 F.col("_last").alias("last_v"),
                 F.col("_bmax_ord").alias("max_ord"))
             carried = state.join(upd.select(k), k, "anti")
-            new_state = carried.unionByName(upd)
-            self._version += 1
-            out = os.path.join(self.state_dir, f"v{self._version}")
-            new_state.write.mode("overwrite").parquet(out)
+            self._commit(carried.unionByName(upd), batch_id)
         finally:
             j.unpersist()
-        tmp = self._ptr() + ".tmp"
-        with open(tmp, "w") as f:
-            f.write(f"{out}\n{self._checkpoint or ''}\n{batch_id}")
-        os.replace(tmp, self._ptr())
-        old = os.path.join(self.state_dir, f"v{self._version - 2}")
-        if os.path.exists(old):
-            shutil.rmtree(old, ignore_errors=True)
 
     def _limits(self) -> DataFrame | None:
         """(key, n, xq, mrq) with xq/mrq as R4 DECIMALS — q359's base CTE

@@ -229,6 +229,65 @@ def test_apply_changes_idempotent_under_tombstone_redelivery(
         F.col("o_orderkey") == victim["o_orderkey"]).count() == 0
 
 
+def test_apply_changes_stale_redelivery_matches_streaming_fold(
+        spark, tmp_path_factory):
+    """A change re-delivered after a newer one for the same key is a no-op:
+    an lsn-2 update (price 222) followed by a re-delivered lsn-1 update
+    (price 111) leaves 222. The engine and StreamingCdcApply fold one
+    batch sequence — that stale re-delivery, a delete of an absent key and
+    a re-delivered delete — to the same live rows."""
+    from pyspark.sql import Row
+    from pyspark.sql.types import LongType, StringType, StructField, StructType
+
+    from inspectadb_spark.streaming.cdc_stream import StreamingCdcApply
+
+    wd = tmp_path_factory.mktemp("eng_stale")
+    eng = Engine(spark, SF_DIR, str(wd / "engine"))
+    orders = eng.table("orders")
+    cols = orders.columns
+    schema = StructType([*orders.schema.fields,
+                         StructField("lsn", LongType()),
+                         StructField("op", StringType())])
+    upd, gone = [r.asDict() for r in orders.orderBy("o_orderkey")
+                 .limit(2).collect()]
+    absent = orders.agg(F.max("o_orderkey")).collect()[0][0] + 1
+    key = upd["o_orderkey"]
+
+    def batch(*changes):
+        return spark.createDataFrame(
+            [Row(**{**row, "lsn": lsn, "op": op}) for lsn, op, row in changes],
+            schema)
+
+    batches = [
+        batch((2, "u", {**upd, "o_totalprice": 222.0})),
+        batch((1, "u", {**upd, "o_totalprice": 111.0})),  # stale
+        batch((3, "d", {**upd, "o_orderkey": absent}),
+              (4, "d", gone)),
+        batch((4, "d", gone)),  # re-delivered delete
+    ]
+
+    def price():
+        return (eng.table("orders").filter(F.col("o_orderkey") == key)
+                .collect()[0]["o_totalprice"])
+
+    eng.apply_changes("orders", batches[0], ["o_orderkey"])
+    assert price() == 222.0
+    eng.apply_changes("orders", batches[1], ["o_orderkey"])
+    assert price() == 222.0, "stale re-delivery overwrote a newer value"
+    for b in batches[2:]:
+        eng.apply_changes("orders", b, ["o_orderkey"])
+
+    stream = StreamingCdcApply(spark, str(wd / "stream"), ["o_orderkey"])
+    seed = orders.select("*", F.lit(0).cast("bigint").alias("lsn"),
+                         F.lit("c").alias("op"))
+    for i, b in enumerate([seed, *batches]):
+        stream._merge_batch(b, i)
+    live = _rows(eng.table("orders"))
+    assert live == _rows(stream.current_state().select(*cols))
+    assert len(live) == orders.count() - 1
+    assert not any(r[0] == str(absent) for r in live)
+
+
 def test_apply_changes_versions_and_derived_grain_refresh(
         spark, tmp_path_factory):
     """Review findings together: (a) table rewrites are versioned —
