@@ -20,6 +20,14 @@ asks when a dashboard slows down. Correctness does not depend on the layer
 chosen: the cache key proves byte-identical inputs + an identical plan, and
 MV routing is the algebra hash-verified by q239's oracle.
 
+``sql_routed(text)`` enters the same path from SQL: ``parse_routable``
+matches one shape — an aggregate over a fact table with 0–2 inner
+equi-joined dimensions — on Spark's own parse tree, so every spelling
+Spark parses alike routes alike. A flat match is served by ``aggregate``,
+a star match by eager aggregation at join-key grain (provenance "star:" /
+"star2:" + the grain read's); anything else runs as plain Spark SQL
+(provenance "sql").
+
 Invalidation is file-version-based end to end: ``apply_changes`` folds a
 CDC batch into the table's stored state and commits a new file version,
 which rotates every dependent cache fingerprint automatically; MV
@@ -37,9 +45,14 @@ state with tombstones filtered out and the two columns dropped.
 
 from __future__ import annotations
 
+import json
+import operator
 import os
 import re
+from decimal import Decimal
+from typing import NamedTuple
 
+from pyspark.errors.exceptions.captured import CapturedException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -106,256 +119,115 @@ class Engine:
         return self.spark.sql(text)
 
     def sql_routed(self, text: str) -> tuple[DataFrame, str]:
-        """Serve SQL through the layered path when it parses into the
-        restricted aggregate grammar (``parse_agg_sql``) over a known
-        table; otherwise run it as plain Spark SQL (provenance "sql").
-        Routed aggregates use the engine-wide DECIMAL-exact sum convention
-        (identical between the MV and base layers, and deterministic),
-        not IEEE-double SUM order-dependence."""
-        parsed = parse_agg_sql(text)
-        if parsed is not None and parsed[0] in self.tables:
-            table, req, where, having, order, limit, sel_order = parsed
-            out, prov = self.aggregate(table, req)
-            # re-project to SELECT-list order: the routed aggregate emits
-            # keys-then-measures, so 'SELECT SUM(x) AS s, b, a ...' would
-            # otherwise come back (a, b, s) while plain spark.sql returns
-            # (s, b, a) — a positional consumer must see one order
-            out = out.select(*sel_order)
-            # WHERE key = literal predicates filter GROUP KEYS only, so
-            # filter-after-aggregate == aggregate-after-filter; Catalyst
-            # pushes the filter below the (MV or base) aggregate, pruning
-            # the summary scan. HAVING references measure aliases — real
-            # columns of the served result — i.e. plain post-agg filters,
-            # as are ORDER BY / LIMIT over served columns (LIMIT only
-            # parses with a key-complete ORDER BY — a total order, since
-            # the group keys are unique — so the cut is deterministic).
-            for cond in where + having:
-                out = out.filter(F.expr(cond))
-            if order:
-                out = out.orderBy(*[
-                    F.col(c).desc() if d else F.col(c).asc()
-                    for c, d in order])
-            if limit is not None:
-                out = out.limit(limit)
-            return out, prov
-        star = parse_star_agg_sql(text)
-        if star is not None:
-            served = self._route_star(star[:6])
-            if served is not None:
-                return self._present(served, *star[6:])
-        star2 = parse_star2_agg_sql(text)
-        if star2 is not None:
-            served = self._route_star2(star2[:10])
-            if served is not None:
-                return self._present(served, *star2[10:])
-        return self.spark.sql(text), "sql"
-
-    @staticmethod
-    def _present(served, having, order, limit):
-        """Apply parsed HAVING / ORDER BY / LIMIT to a routed star result.
-        All three are pure post-aggregation operations over the served
-        columns — HAVING terms compare declared aggregate ALIASES (real
-        columns of the result) to numeric literals, ORDER BY references
-        output names, and LIMIT only parses under a key-complete ORDER BY
-        (a total order, since the group keys are unique per row) — so
-        applying them to the routed result is positionally identical to
-        plain-SQL execution; the eager-aggregation exactness argument is
-        untouched because nothing here runs before the aggregate."""
+        """Serve ``text`` through the layered path when its parse tree
+        matches the routable shape (``parse_routable``) over known tables;
+        otherwise run it as plain Spark SQL (provenance "sql"). Routed
+        aggregates use the engine-wide DECIMAL-exact sum convention
+        (identical between the MV and base layers, and deterministic).
+        HAVING, ORDER BY and LIMIT then apply to the routed result: all
+        three are pure post-aggregation operations over served columns
+        (LIMIT only under a key-complete ORDER BY, a total order), so the
+        result is positionally identical to plain-SQL execution."""
+        q = parse_routable(self.spark, text)
+        served = None
+        if q is not None and (
+                {q.fact, *(j[0] for j in q.joins)} <= self.tables.keys()):
+            served = self._route_star(q) if q.joins else self._route_flat(q)
+        if served is None:
+            return self.spark.sql(text), "sql"
         out, prov = served
-        for cond in having:
-            out = out.filter(F.expr(cond))
-        if order:
-            out = out.orderBy(*[
-                F.col(c).desc() if d else F.col(c).asc() for c, d in order])
-        if limit is not None:
-            out = out.limit(limit)
+        for alias, op, value in q.having:
+            out = out.filter(_CMP_OPS[op](F.col(alias), F.lit(value)))
+        if q.order:
+            out = out.orderBy(*[F.col(c).desc() if desc else F.col(c).asc()
+                                for c, desc in q.order])
+        if q.limit is not None:
+            out = out.limit(q.limit)
         return out, prov
 
-    def _route_star(self, star) -> tuple[DataFrame, str] | None:
-        """Serve a single-dimension star aggregate —
-        ``SELECT d.attr, AGG(f.m) FROM fact f JOIN dim d ON f.k = d.k
-        GROUP BY d.attr`` — by eager aggregation: aggregate the fact at
-        join-key grain through the layered path, broadcast-join the dim
-        attributes onto the (summary-sized) grain rows, and re-aggregate
-        to the requested attrs. The rewrite is exact for every supported
-        measure regardless of dim-key multiplicity: each k-grain partial
-        appears once per matching dim row in BOTH the joined-then-
-        aggregated and the aggregated-then-joined forms (SUM/COUNT scale
-        together, MIN/MAX are duplication-blind, AVG re-derives from
-        sum+count), and an inner join drops NULL/unmatched keys from
-        both forms alike.
+    def _route_flat(self, q: Routable) -> tuple[DataFrame, str]:
+        """Serve a single-table aggregate through ``aggregate``. WHERE terms
+        compare GROUP keys to literals, so filter-after-aggregate ==
+        aggregate-after-filter; Catalyst pushes the filter below the (MV or
+        base) aggregate, pruning the summary scan."""
+        req = AggRequest(
+            keys={i.col: None for i in q.items if i.agg is None},
+            measures={i.name: (i.agg, i.col) for i in q.items if i.agg})
+        out, prov = self.aggregate(q.fact, req)
+        # SELECT-list order, as plain spark.sql: the routed aggregate emits
+        # keys-then-measures, and a positional consumer must see one order
+        out = out.select(*[i.name for i in q.items])
+        for _, col, value in q.where:
+            out = out.filter(F.col(col) == F.lit(value))
+        return out, prov
 
-        A WHERE conjunction of dim-attribute equalities filters the
-        broadcast dim BEFORE the grain join: the predicate references
-        only dim columns, so filtering dim rows pre-join equals
-        filtering the joined rows (inner join), which is exactly where
-        plain SQL's pre-aggregation WHERE sits — the eager-aggregation
-        exactness argument is untouched because the fact-side grain
-        partials are computed independently of which dim rows survive.
+    def _route_star(self, q: Routable) -> tuple[DataFrame, str] | None:
+        """Serve a star aggregate — ``SELECT d1.a, …, AGG(f.m) FROM fact f
+        JOIN dim1 d1 ON f.k1 = d1.dk1 [JOIN dim2 d2 …] GROUP BY d1.a, …`` —
+        by eager aggregation: aggregate the fact at join-key grain ({k1, …}
+        ∪ fact-side group cols) through the layered path, broadcast-join
+        each dim's attributes onto the grain rows, and re-aggregate. Exact
+        for every supported measure whatever the dim-key multiplicities: a
+        grain partial appears once per matching dim-row combination in BOTH
+        the joined-then-aggregated and the aggregated-then-joined forms
+        (SUM/COUNT scale together, MIN/MAX are duplication-blind, AVG
+        re-derives from sum+count), and the inner joins drop NULL/unmatched
+        keys from both alike. A WHERE equality on a dim's columns filters
+        that broadcast dim before its join (it commutes with inner joins).
 
-        Refuse-by-default: returns None — caller falls through to plain
-        Spark SQL — unless some registered MV over the fact table
-        DECLARES the denormalized key set ({join key} ∪ fact-side group
-        cols) with derivable measures, and every WHERE column exists on
-        the dim table. The fact table is then never scanned: the grain
-        read is MV- (or cache-) served, the dim is broadcast, and the
-        re-aggregation shuffles summary-sized rows.
-        """
-        fact, dim, fkey, dkey, items, dim_where = star
-        if fact not in self.tables or dim not in self.tables:
+        Refuse-by-default: returns None (plain Spark SQL serves the text)
+        unless an MV over the fact DECLARES the grain keys with derivable
+        measures, no dim attr shares its name with a grain column (the
+        post-join groupBy would be ambiguous), and every WHERE column
+        exists on its dim (so plain SQL raises the real analysis error).
+        The fact table is then never scanned."""
+        attrs = [[i.col for i in q.items if i.agg is None and i.src == n]
+                 for n in range(len(q.joins) + 1)]
+        dim_attrs = [a for per_dim in attrs[1:] for a in per_dim]
+        grain_keys = {fk for _, fk, _ in q.joins} | set(attrs[0])
+        if not dim_attrs or ({k.lower() for k in grain_keys}
+                             & {a.lower() for a in dim_attrs}):
             return None
-        fact_group = [i[2] for i in items if i[0] == "key" and i[1] == "fact"]
-        dim_attrs = [i[2] for i in items if i[0] == "key" and i[1] == "dim"]
-        aggs = [i for i in items if i[0] == "agg"]
-        if not dim_attrs:
-            return None  # no dim rollup — the flat grammar handles it
-        need_keys = {fkey, *fact_group}
-        if need_keys & set(dim_attrs):
-            # a dim attr sharing its name with a fact grain column would
-            # make the post-join groupBy ambiguous — not provably
-            # routable, fall through to plain SQL
-            return None
+        aggs = [i for i in q.items if i.agg]
         # grain-level measures under reserved aliases (avg = sum + count)
         gm: dict[str, tuple[str, str]] = {}
-        for _, agg, col, alias in aggs:
-            if agg == "avg":
-                gm[f"__sum_{alias}"] = ("sum", col)
-                gm[f"__count_{alias}"] = ("count", col)
-            else:
-                gm[f"__{agg}_{alias}"] = (agg, col)
-        declared = any(
-            bt == fact and need_keys <= set(mv.keys)
-            and _derivable(gm, mv.measures)
-            for mv, _path, bt, _b in self._mvs.values())
-        if not declared:
+        for i in aggs:
+            split = ("sum", "count") if i.agg == "avg" else (i.agg,)
+            gm.update({f"__{a}_{i.name}": (a, i.col) for a in split})
+        if not any(bt == q.fact and grain_keys <= set(mv.keys)
+                   and _derivable(gm, mv.measures)
+                   for mv, _path, bt, _b in self._mvs.values()):
             return None
-        dim_base = self.tables[dim]
-        if any(c not in dim_base.columns for c, _ in dim_where):
-            return None  # unknown dim column: let plain SQL raise it
-        req = AggRequest(keys={k: None for k in sorted(need_keys)},
-                         measures=gm)
-        grain, prov = self.aggregate(fact, req)
-        for c, lit in dim_where:
-            dim_base = dim_base.filter(F.col(c) == F.expr(lit))
-        dimdf = dim_base.select(
-            F.col(dkey).alias("__dk"),
-            *[F.col(a) for a in dim_attrs])
-        joined = grain.join(F.broadcast(dimdf),
-                            grain[fkey] == dimdf["__dk"], "inner")
-        out_aggs = []
-        for _, agg, col, alias in aggs:
-            if agg == "sum":
-                # per-grain partials re-sum under the engine-wide
-                # DECIMAL-exact convention (order-deterministic)
-                out_aggs.append(
-                    F.sum(F.col(f"__sum_{alias}").cast(_DEC))
-                    .cast("double").alias(alias))
-            elif agg == "count":
-                out_aggs.append(F.sum(f"__count_{alias}")
-                                .cast("bigint").alias(alias))
-            elif agg == "avg":
-                out_aggs.append(
-                    (F.sum(F.col(f"__sum_{alias}").cast(_DEC))
-                     .cast("double") / F.sum(f"__count_{alias}"))
-                    .alias(alias))
-            else:
-                out_aggs.append(
-                    getattr(F, agg)(f"__{agg}_{alias}").alias(alias))
-        out = (joined.groupBy(*[F.col(c) for c in dim_attrs + fact_group])
-               .agg(*out_aggs)
-               .select(*[i[2] if i[0] == "key" else i[3] for i in items]))
-        return out, f"star:{prov}"
+        dims = [self.tables[d] for d, _, _ in q.joins]
+        if any(c not in dims[src - 1].columns for src, c, _ in q.where):
+            return None
+        grain, prov = self.aggregate(q.fact, AggRequest(
+            keys={k: None for k in sorted(grain_keys)}, measures=gm))
+        joined = grain
+        for n, (dim, (_, fkey, dkey)) in enumerate(zip(dims, q.joins), 1):
+            for src, c, value in q.where:
+                if src == n:
+                    dim = dim.filter(F.col(c) == F.lit(value))
+            dim = dim.select(F.col(dkey).alias(f"__dk{n}"), *attrs[n])
+            joined = joined.join(F.broadcast(dim),
+                                 grain[fkey] == dim[f"__dk{n}"], "inner")
 
-    def _route_star2(self, star) -> tuple[DataFrame, str] | None:
-        """Serve a TWO-dimension star aggregate — ``SELECT d1.a, d2.b,
-        AGG(f.m) FROM fact f JOIN dim1 d1 ON f.k1 = d1.dk1 JOIN dim2 d2
-        ON f.k2 = d2.dk2 GROUP BY d1.a, d2.b`` — by the same eager
-        aggregation as ``_route_star``, at {k1, k2} grain. Exactness
-        extends unchanged: a (k1, k2)-grain partial appears once per
-        matching (dim1-row, dim2-row) PAIR in both the joined-then-
-        aggregated and aggregated-then-joined forms — the dim
-        multiplicities MULTIPLY identically (m1·m2 copies of each
-        partial), SUM/COUNT scale together, MIN/MAX are duplication-
-        blind, AVG re-derives from sum+count, and both inner joins drop
-        NULL/unmatched keys from both forms alike. Per-dim WHERE
-        equality conjunctions filter each broadcast dim BEFORE its join
-        (a predicate over one dim's columns commutes with both inner
-        joins). Refuse-by-default is the single-dim contract verbatim:
-        an MV over the fact must declare {k1, k2} ∪ fact-side group
-        cols with derivable measures; the fact table is never scanned.
-        """
-        fact, d1, d2, k1, dk1, k2, dk2, items, where1, where2 = star
-        if (fact not in self.tables or d1 not in self.tables
-                or d2 not in self.tables):
-            return None
-        fact_group = [i[2] for i in items if i[0] == "key" and i[1] == "fact"]
-        attrs1 = [i[2] for i in items if i[0] == "key" and i[1] == "dim1"]
-        attrs2 = [i[2] for i in items if i[0] == "key" and i[1] == "dim2"]
-        aggs = [i for i in items if i[0] == "agg"]
-        if not attrs1 and not attrs2:
-            return None  # no dim rollup — not a star
-        need_keys = {k1, k2, *fact_group}
-        if need_keys & set(attrs1 + attrs2):
-            # a dim attr sharing its name with a fact grain column makes
-            # the post-join groupBy ambiguous — not provably routable
-            return None
-        gm: dict[str, tuple[str, str]] = {}
-        for _, agg, col, alias in aggs:
-            if agg == "avg":
-                gm[f"__sum_{alias}"] = ("sum", col)
-                gm[f"__count_{alias}"] = ("count", col)
-            else:
-                gm[f"__{agg}_{alias}"] = (agg, col)
-        declared = any(
-            bt == fact and need_keys <= set(mv.keys)
-            and _derivable(gm, mv.measures)
-            for mv, _path, bt, _b in self._mvs.values())
-        if not declared:
-            return None
-        d1_base, d2_base = self.tables[d1], self.tables[d2]
-        if any(c not in d1_base.columns for c, _ in where1):
-            return None
-        if any(c not in d2_base.columns for c, _ in where2):
-            return None
-        req = AggRequest(keys={k: None for k in sorted(need_keys)},
-                         measures=gm)
-        grain, prov = self.aggregate(fact, req)
-        for c, lit in where1:
-            d1_base = d1_base.filter(F.col(c) == F.expr(lit))
-        for c, lit in where2:
-            d2_base = d2_base.filter(F.col(c) == F.expr(lit))
-        dim1df = d1_base.select(F.col(dk1).alias("__dk1"),
-                                *[F.col(a) for a in attrs1])
-        dim2df = d2_base.select(F.col(dk2).alias("__dk2"),
-                                *[F.col(a) for a in attrs2])
-        joined = (grain
-                  .join(F.broadcast(dim1df),
-                        grain[k1] == dim1df["__dk1"], "inner")
-                  .join(F.broadcast(dim2df),
-                        grain[k2] == dim2df["__dk2"], "inner"))
-        out_aggs = []
-        for _, agg, col, alias in aggs:
-            if agg == "sum":
-                out_aggs.append(
-                    F.sum(F.col(f"__sum_{alias}").cast(_DEC))
-                    .cast("double").alias(alias))
-            elif agg == "count":
-                out_aggs.append(F.sum(f"__count_{alias}")
-                                .cast("bigint").alias(alias))
-            elif agg == "avg":
-                out_aggs.append(
-                    (F.sum(F.col(f"__sum_{alias}").cast(_DEC))
-                     .cast("double") / F.sum(f"__count_{alias}"))
-                    .alias(alias))
-            else:
-                out_aggs.append(
-                    getattr(F, agg)(f"__{agg}_{alias}").alias(alias))
-        out = (joined
-               .groupBy(*[F.col(c)
-                          for c in attrs1 + attrs2 + fact_group])
-               .agg(*out_aggs)
-               .select(*[i[2] if i[0] == "key" else i[3] for i in items]))
-        return out, f"star2:{prov}"
+        def reaggregate(i: Item):
+            if i.agg in ("min", "max"):
+                return getattr(F, i.agg)(f"__{i.agg}_{i.name}")
+            count = F.sum(f"__count_{i.name}")
+            if i.agg == "count":
+                return count.cast("bigint")
+            # sum partials re-sum under the engine-wide DECIMAL-exact
+            # convention (order-deterministic)
+            total = F.sum(F.col(f"__sum_{i.name}").cast(_DEC)).cast("double")
+            return total if i.agg == "sum" else total / count
+
+        out = (joined.groupBy(*dim_attrs, *attrs[0])
+               .agg(*[reaggregate(i).alias(i.name) for i in aggs])
+               .select(*[i.name for i in q.items]))
+        star = "star" if len(q.joins) == 1 else f"star{len(q.joins)}"
+        return out, f"{star}:{prov}"
 
     # -- summary tables ----------------------------------------------------
     def register_mv(self, mv: MVDef, base_table: str,
@@ -463,379 +335,263 @@ class Engine:
         return stored, "cache" if hit else provenance
 
 
-# -- restricted SQL front-end for the serving layer -------------------------
 
-_AGG_RE = re.compile(
-    r"^\s*(SUM|COUNT|AVG|MIN|MAX)\s*\(\s*(DISTINCT\s+)?"
-    r"(\*|[A-Za-z_][A-Za-z0-9_]*)\s*\)"
-    r"\s+AS\s+([A-Za-z_][A-Za-z0-9_]*)\s*$",
-    re.IGNORECASE)
-_IDENT_RE = re.compile(r"^[A-Za-z_][A-Za-z0-9_]*$")
-_SHAPE_RE = re.compile(
-    r"^\s*SELECT\s+(.*?)\s+FROM\s+([A-Za-z_][A-Za-z0-9_]*)"
-    r"(?:\s+WHERE\s+(.+?))?"
-    r"\s+GROUP\s+BY\s+(.+?)"
-    r"(?:\s+HAVING\s+(.+?))?"
-    r"(?:\s+ORDER\s+BY\s+(.+?))?"
-    r"(?:\s+LIMIT\s+(\d+))?\s*;?\s*$",
-    re.IGNORECASE | re.DOTALL)
-_LITERAL = r"(?:-?\d+(?:\.\d+)?|'[^']*')"
-_WHERE_COND_RE = re.compile(
-    rf"^([A-Za-z_][A-Za-z0-9_]*)\s*=\s*({_LITERAL})$")
-_HAVING_COND_RE = re.compile(
-    rf"^([A-Za-z_][A-Za-z0-9_]*)\s*(=|<>|!=|<=|>=|<|>)\s*(-?\d+(?:\.\d+)?)$")
-_AND_RE = re.compile(r"\s+AND\s+", re.IGNORECASE)
-_ORDER_TERM_RE = re.compile(
-    r"^([A-Za-z_][A-Za-z0-9_]*)(?:\s+(ASC|DESC))?$",
-    re.IGNORECASE)
+# -- SQL front-end: one matcher over Spark's parse tree ---------------------
+
+_IDENT = re.compile(r"[A-Za-z_][A-Za-z0-9_]*")
+_AGGS = ("sum", "count", "avg", "min", "max")
+_CMP = {"EqualTo": "=", "LessThan": "<", "LessThanOrEqual": "<=",
+        "GreaterThan": ">", "GreaterThanOrEqual": ">="}
+_CMP_OPS = {"=": operator.eq, "!=": operator.ne, "<": operator.lt,
+            "<=": operator.le, ">": operator.gt, ">=": operator.ge}
+# each sort direction's default null order; any other is written out and
+# refused (the routed orderBy uses the defaults)
+_NULLS = {"Ascending$": "NullsFirst$", "Descending$": "NullsLast$"}
+_INNER = {"object": "org.apache.spark.sql.catalyst.plans.Inner$"}
+_LITERALS = {"integer": int, "long": int, "double": float, "decimal": Decimal}
 
 
-def _parse_presentation(having_clause, order_clause, limit_clause,
-                        key_names, agg_aliases):
-    """Validate the post-aggregation presentation clauses shared by the
-    flat, star and star2 grammars. HAVING terms must compare a declared
-    aggregate ALIAS to a numeric literal (pure post-agg filters over real
-    result columns); ORDER BY terms must be served output names (group
-    keys or aliases); LIMIT routes only under a key-complete ORDER BY —
-    the group keys are unique per result row, so covering them all pins
-    a TOTAL order and the cut is deterministic (a partial order could tie
-    at the cut and diverge from plain-SQL execution — ADVICE r05 item 4).
-    Returns (having_conds, order_terms, limit) or None to refuse."""
-    having: list[str] = []
-    if having_clause is not None:
-        for cond in _AND_RE.split(having_clause.strip()):
-            hm = _HAVING_COND_RE.match(cond.strip())
-            if not hm or hm.group(1) not in agg_aliases:
-                return None  # HAVING must compare a declared agg alias
-            having.append(f"{hm.group(1)} {hm.group(2)} {hm.group(3)}")
+class Item(NamedTuple):
+    """One SELECT item of a routable aggregate."""
+    name: str        # output column
+    src: int         # relation: 0 = the fact, n = the dim of joins[n - 1]
+    agg: str | None  # None for a group key; "count_distinct" for DISTINCT
+    col: str         # source column; "*" for COUNT(*)
+
+
+class Routable(NamedTuple):
+    """``parse_routable``'s record of a routable aggregate."""
+    fact: str
+    joins: list[tuple[str, str, str]]      # (dim table, fact key, dim key)
+    items: list[Item]                      # in SELECT order
+    where: list[tuple[int, str, object]]   # (relation, column) = literal
+    having: list[tuple[str, str, object]]  # (aggregate alias, op, number)
+    order: list[tuple[str, bool]]          # (output name, descending)
+    limit: int | None
+
+
+class _Refuse(Exception):
+    """The parse tree is outside the routable shape."""
+
+
+def _need(ok) -> None:
+    if not ok:
+        raise _Refuse
+
+
+def _tree(flat: list[dict]) -> dict:
+    """Nest one of ``toJSON``'s pre-order node lists: every node gains its
+    short class name under ``cls`` and its children under ``kids``."""
+    nodes = iter(flat)
+
+    def build() -> dict:
+        n = next(nodes)
+        n["cls"] = n["class"].rsplit(".", 1)[-1]
+        n["kids"] = [build() for _ in range(n["num-children"])]
+        return n
+    return build()
+
+
+def _parts(printed: str) -> list[str]:
+    """Name parts that toJSON prints as one "[a, b]" string."""
+    parts = printed[1:-1].split(", ")
+    _need(all(_IDENT.fullmatch(p) for p in parts))
+    return parts
+
+
+def _name(e: dict, n: int = 1) -> list[str]:
+    """The parts of an n-part column name."""
+    _need(e["cls"] == "UnresolvedAttribute")
+    parts = _parts(e["nameParts"])
+    _need(len(parts) == n)
+    return parts
+
+
+def _literal(e: dict, numeric: bool = False):
+    """A literal's value, for the types whose printed value round-trips
+    (a binary literal prints a JVM object id; NULL is typed void)."""
+    _need(e["cls"] == "Literal")
+    kind = e["dataType"].split("(")[0]  # decimal(p,s) -> decimal
+    _need(kind in _LITERALS or kind == "string" and not numeric)
+    return _LITERALS.get(kind, str)(e["value"])
+
+
+def _conjuncts(e: dict) -> list[dict]:
+    if e["cls"] == "And":
+        return [c for k in e["kids"] for c in _conjuncts(k)]
+    return [e]
+
+
+def _relations(node: dict) -> list[tuple[str, str | None, dict | None]]:
+    """The FROM clause as (table, alias, ON condition), fact first: a
+    left-deep chain of inner joins, each with an ON condition."""
+    on = None
+    prior: list = []
+    if node["cls"] == "Join":
+        _need(node["joinType"] == _INNER and node["hint"] is None
+              and node.get("condition"))
+        on = _tree(node["condition"])
+        prior = _relations(node["kids"][0])
+        node = node["kids"][1]
+    alias = None
+    if node["cls"] == "SubqueryAlias":
+        _need(not node["identifier"]["qualifier"])
+        alias = node["identifier"]["name"]
+        node = node["kids"][0]
+    _need(node["cls"] == "UnresolvedRelation" and not node["isStreaming"])
+    table = _parts(node["multipartIdentifier"])
+    _need(len(table) == 1)
+    return prior + [(table[0], alias, on)]
+
+
+def parse_routable(spark: SparkSession, text: str) -> Routable | None:
+    """Match ``text`` against the one SQL shape ``sql_routed`` serves, on
+    Spark's own parse tree (``sqlParser().parsePlan(text).toJSON()``), read
+    before analysis: no catalog lookup, so names resolve against the
+    engine's own ``tables`` and unknown names parse too.
+
+        SELECT <key | AGG(col) [AS] alias>, ...
+        FROM <fact> [f JOIN <dim> d ON f.k = d.dk [JOIN ...]]
+        [WHERE <col> = <literal> [AND ...]] GROUP BY <the SELECT keys>
+        [HAVING <alias> <cmp> <number> [AND ...]]
+        [ORDER BY <output name> [ASC|DESC], ...] [LIMIT n]
+
+    Every spelling Spark parses to one tree matches alike (keyword case,
+    comments, line breaks, ``COUNT(1)``, an alias without AS). Returns a
+    ``Routable``, or None unless the text is PROVABLY in the shape — a
+    mis-match routed through a summary would be a wrong answer:
+
+    - flat (no join): unqualified columns of an unaliased table; WHERE only
+      on GROUP BY keys (it commutes with the aggregate); COUNT(DISTINCT
+      col) is the one DISTINCT shape (mv.py serves it for grain keys).
+    - star (1–2 joins): distinct aliases on every table, the fact not also
+      a dim; each ON equates a fact column with its dim's; qualified
+      columns; fact-side measures; WHERE only on dim columns.
+    - SUM/COUNT/AVG/MIN/MAX of one column (or COUNT(*)), aliased; GROUP BY
+      exactly the SELECT keys; unique output names.
+    - HAVING compares an aggregate alias to a number; ORDER BY names output
+      columns in the default null order; LIMIT needs a key-complete ORDER
+      BY (a total order: the cut is deterministic).
+
+    Refused too: any backquote (toJSON prints name parts as one string, so
+    `d, x` reads like d.x), literals whose printed value does not
+    round-trip (only integer, long, double, decimal and string pass), and
+    hints, CTEs, USING joins, FILTER clauses and every other construct,
+    which fall out as unmatched tree nodes."""
+    if "`" in text:
+        return None
+    try:
+        plan = spark._jsparkSession.sessionState().sqlParser().parsePlan(text)
+        flat = json.loads(plan.toJSON())
+    except CapturedException:
+        return None  # not parseable: plain spark.sql raises the real error
+    try:
+        return _match(_tree(flat))
+    except _Refuse:
+        return None
+
+
+def _match(node: dict) -> Routable:
+    limit = None
+    if node["cls"] == "GlobalLimit":
+        limit = _literal(_tree(node["limitExpr"]), numeric=True)
+        _need(isinstance(limit, int) and limit >= 0)
+        node = node["kids"][0]
+        _need(node["cls"] == "LocalLimit")
+        node = node["kids"][0]
     order: list[tuple[str, bool]] = []
-    if order_clause is not None:
-        for term in order_clause.split(","):
-            om = _ORDER_TERM_RE.match(term.strip())
-            if not om or (om.group(1) not in key_names
-                          and om.group(1) not in agg_aliases):
-                return None
-            order.append(
-                (om.group(1), (om.group(2) or "ASC").upper() == "DESC"))
-    limit_n = int(limit_clause) if limit_clause is not None else None
-    if limit_n is not None and not set(key_names) <= {c for c, _ in order}:
-        return None
-    return having, order, limit_n
+    if node["cls"] == "Sort":
+        _need(node["global"])
+        for term in map(_tree, node["order"]):
+            direction = term["direction"]["object"].rsplit(".", 1)[-1]
+            _need(term["nullOrdering"]["object"].endswith(_NULLS[direction]))
+            order.append((_name(term["kids"][0])[0],
+                          direction == "Descending$"))
+        node = node["kids"][0]
+    having_terms = []
+    if node["cls"] == "UnresolvedHaving":
+        having_terms = _conjuncts(_tree(node["havingCondition"]))
+        node = node["kids"][0]
+    _need(node["cls"] == "Aggregate")
+    agg_node, node = node, node["kids"][0]
+    where_terms = []
+    if node["cls"] == "Filter":
+        where_terms = _conjuncts(_tree(node["condition"]))
+        node = node["kids"][0]
 
+    tables, aliases, ons = zip(*_relations(node))
+    star = len(tables) > 1
+    _need(len(tables) <= 3)
+    if star:
+        _need(None not in aliases and len(set(aliases)) == len(aliases)
+              and tables[0] not in tables[1:])
+    else:
+        _need(aliases == (None,))
+    src_of = {a: n for n, a in enumerate(aliases)}
 
-def parse_agg_sql(text: str):
-    """Parse the restricted grammar
-    ``SELECT <keys and aggs> FROM <table> [WHERE <key>=<lit> [AND ...]]
-    GROUP BY <keys> [HAVING <agg_alias> <cmp> <num> [AND ...]]
-    [ORDER BY <col> [ASC|DESC], ...] [LIMIT n]`` into
-    (table, AggRequest, where_conds, having_conds, order_terms, limit),
-    or None when the statement doesn't fit.
+    def ref(e: dict) -> tuple[int, str]:
+        """(relation, column) of a column reference."""
+        if not star:
+            return 0, _name(e)[0]
+        alias, col = _name(e, 2)
+        _need(alias in src_of)
+        return src_of[alias], col
 
-    Deliberately narrow: plain column keys, SUM/COUNT/AVG/MIN/MAX over a
-    single column (or ``*`` for COUNT), mandatory AS aliases on aggregates.
-    The predicate extensions stay provably route-safe: every WHERE column
-    must be a GROUP BY key (filtering keys commutes with the aggregation,
-    so the routed summary filter gives the same answer as a base-table
-    WHERE) and every HAVING term compares a declared aggregate ALIAS to a
-    numeric literal (pure post-aggregation filtering). One DISTINCT shape
-    parses: ``COUNT(DISTINCT <column>)`` — the MV layer serves it
-    structurally when the column is a declared grain key
-    (operators/mv.py::_derivable) and the base fallback is exact
-    otherwise. Anything else — expressions, joins, non-key WHERE columns,
-    OR, SUM/AVG/MIN/MAX DISTINCT, COUNT(DISTINCT *) — returns None and
-    the caller falls through to full Spark SQL. Exact-match parsing is
-    the point: a mis-parse silently routed to a summary would be a wrong
-    answer, so anything not PROVABLY in the grammar is not routed.
-    """
-    m = _SHAPE_RE.match(text)
-    if not m:
-        return None
-    select_list, table = m.group(1), m.group(2)
-    where_clause, group_by, having_clause = m.group(3), m.group(4), m.group(5)
-    order_clause, limit_clause = m.group(6), m.group(7)
-    keys = []
-    for g in group_by.split(","):
-        g = g.strip()
-        if not _IDENT_RE.match(g):
-            return None
-        keys.append(g)
-    measures: dict[str, tuple[str, str]] = {}
-    sel_keys = []
-    select_order: list[str] = []
-    for item in _split_top_level(select_list):
-        item = item.strip()
-        if _IDENT_RE.match(item):
-            sel_keys.append(item)
-            select_order.append(item)
+    joins = []
+    for n, (table, on) in enumerate(zip(tables[1:], ons[1:]), 1):
+        _need(on["cls"] == "EqualTo")
+        (s1, c1), (s2, c2) = map(ref, on["kids"])
+        _need({s1, s2} == {0, n})
+        joins.append((table, c1, c2) if s1 == 0 else (table, c2, c1))
+
+    items: list[Item] = []
+    for e in map(_tree, agg_node["aggregateExpressions"]):
+        if e["cls"] != "Alias":
+            src, col = ref(e)
+            items.append(Item(col, src, None, col))
             continue
-        am = _AGG_RE.match(item)
-        if not am:
-            return None
-        agg, dist, col, alias = (am.group(1).lower(), am.group(2),
-                                 am.group(3), am.group(4))
-        if col == "*" and agg != "count":
-            return None
-        if dist is not None:
-            # DISTINCT routes only as COUNT(DISTINCT <column>): the MV
-            # layer serves it structurally when the column is a declared
-            # grain key (operators/mv.py::_derivable), and the base
-            # fallback is exact otherwise. SUM/AVG/MIN/MAX DISTINCT are
-            # not provably routable -> refuse, fall through to plain SQL
-            if agg != "count" or col == "*":
-                return None
-            measures[alias] = ("count_distinct", col)
-            select_order.append(alias)
+        f = e["kids"][0]
+        _need(_IDENT.fullmatch(e["name"]) and f["cls"] == "UnresolvedFunction"
+              and f["num-children"] == 1 and not f["ignoreNulls"]
+              and not f["orderingWithinGroup"] and not f["isInternal"])
+        name = _parts(f["nameParts"])
+        _need(len(name) == 1 and name[0].lower() in _AGGS)
+        agg, arg = name[0].lower(), f["kids"][0]
+        if agg == "count" and arg["cls"] == "Literal":
+            # the parser writes COUNT(*) as COUNT(1)
+            _need(not f["isDistinct"] and arg["dataType"] == "integer"
+                  and arg["value"] == "1")
+            items.append(Item(e["name"], 0, "count", "*"))
             continue
-        measures[alias] = (agg, "*" if col == "*" else col)
-        select_order.append(alias)
-    if sorted(sel_keys) != sorted(keys) or not measures:
-        return None
-    n_aggs = sum(1 for item in _split_top_level(select_list)
-                 if not _IDENT_RE.match(item.strip()))
-    if n_aggs != len(measures):  # duplicate aliases collapsed -> not
-        return None              # provably the same shape as plain SQL
-    where_conds: list[str] = []
-    if where_clause is not None:
-        for cond in _AND_RE.split(where_clause.strip()):
-            wm = _WHERE_COND_RE.match(cond.strip())
-            if not wm or wm.group(1) not in keys:
-                return None  # non-key / non-equality WHERE: not routable
-            where_conds.append(f"{wm.group(1)} = {wm.group(2)}")
-    pres = _parse_presentation(having_clause, order_clause, limit_clause,
-                               keys, measures)
-    if pres is None:
-        return None
-    having_conds, order_terms, limit_n = pres
-    return (table, AggRequest(keys={k: None for k in keys},
-                              measures=measures),
-            where_conds, having_conds, order_terms, limit_n, select_order)
+        src, col = ref(arg)
+        _need(src == 0)  # only fact-side measures re-aggregate safely
+        if f["isDistinct"]:
+            _need(agg == "count" and not star)
+            agg = "count_distinct"
+        items.append(Item(e["name"], 0, agg, col))
+    keys = [(i.src, i.col) for i in items if i.agg is None]
+    group = [ref(e) for e in map(_tree, agg_node["groupingExpressions"])]
+    names = [i.name for i in items]
+    _need(group and sorted(group) == sorted(keys) and len(keys) < len(items)
+          and len({n.lower() for n in names}) == len(names))
 
-
-_STAR_SHAPE_RE = re.compile(
-    r"^\s*SELECT\s+(.*?)\s+FROM\s+([A-Za-z_]\w*)\s+(?:AS\s+)?([A-Za-z_]\w*)"
-    r"\s+JOIN\s+([A-Za-z_]\w*)\s+(?:AS\s+)?([A-Za-z_]\w*)\s+ON\s+"
-    r"([A-Za-z_]\w*)\.([A-Za-z_]\w*)\s*=\s*([A-Za-z_]\w*)\.([A-Za-z_]\w*)"
-    r"(?:\s+WHERE\s+(.+?))?"
-    r"\s+GROUP\s+BY\s+(.+?)"
-    r"(?:\s+HAVING\s+(.+?))?"
-    r"(?:\s+ORDER\s+BY\s+(.+?))?"
-    r"(?:\s+LIMIT\s+(\d+))?\s*;?\s*$",
-    re.IGNORECASE | re.DOTALL)
-_STAR_WHERE_RE = re.compile(
-    rf"^([A-Za-z_]\w*)\.([A-Za-z_]\w*)\s*=\s*({_LITERAL})$")
-_QCOL_RE = re.compile(r"^([A-Za-z_]\w*)\.([A-Za-z_]\w*)$")
-_STAR_AGG_RE = re.compile(
-    r"^\s*(SUM|COUNT|AVG|MIN|MAX)\s*"
-    r"\(\s*(\*|[A-Za-z_]\w*\.[A-Za-z_]\w*)\s*\)"
-    r"\s+AS\s+([A-Za-z_]\w*)\s*$", re.IGNORECASE)
-
-
-def parse_star_agg_sql(text: str):
-    """Parse the restricted single-dimension star grammar
-    ``SELECT <d.attr | f.col | AGG(f.m) AS alias>... FROM <fact> f
-    JOIN <dim> d ON f.k = d.k [WHERE d.attr = <lit> [AND ...]]
-    GROUP BY <the non-agg select items>
-    [HAVING <agg_alias> <cmp> <num> [AND ...]]
-    [ORDER BY <out_col> [ASC|DESC], ...] [LIMIT n]``
-    into (fact, dim, fact_key, dim_key, items, dim_where, having, order,
-    limit) where each item is ("key", "fact"|"dim", col) or
-    ("agg", agg, col-or-*, alias) in SELECT order and dim_where is a list
-    of (dim_col, literal_text) equality conditions — or None when the
-    statement doesn't fit. HAVING / ORDER BY / LIMIT carry the flat
-    grammar's discipline verbatim (``_parse_presentation``): HAVING
-    compares declared aggregate aliases to numeric literals, ORDER BY
-    references served output names, and LIMIT requires a key-complete
-    ORDER BY (total order over unique group keys → deterministic cut).
-
-    Same exact-match philosophy as ``parse_agg_sql``: one INNER equi-join
-    on a single qualified column pair, every SELECT/GROUP BY column
-    qualified by a declared alias, measures only over fact columns (or
-    COUNT(*)) with mandatory AS aliases, no HAVING/expressions/OUTER
-    joins, and no duplicate output names. WHERE is accepted ONLY as a
-    conjunction of dim-qualified equality-to-literal terms: a predicate
-    over dim columns commutes with the inner join (filter the dim before
-    joining ≡ filter the joined rows) and runs pre-aggregation on both
-    the routed and plain-SQL forms, so routing stays provably exact —
-    a fact-side or non-equality WHERE returns None. Anything not
-    PROVABLY in the grammar returns None and the caller runs plain
-    Spark SQL — a mis-parse silently routed through a summary would be
-    a wrong answer.
-    """
-    m = _STAR_SHAPE_RE.match(text)
-    if not m:
-        return None
-    (sel, fact, fa, dim, da, lq, lc, rq, rc, where_clause, group_by,
-     having_clause, order_clause, limit_clause) = m.groups()
-    if fa == da or fact == dim or {lq, rq} != {fa, da}:
-        return None
-    fkey, dkey = (lc, rc) if lq == fa else (rc, lc)
-    dim_where: list[tuple[str, str]] = []
-    if where_clause is not None:
-        for cond in _AND_RE.split(where_clause.strip()):
-            wm = _STAR_WHERE_RE.match(cond.strip())
-            if not wm or wm.group(1) != da:
-                return None  # only dim-side equality predicates commute
-            dim_where.append((wm.group(2), wm.group(3)))
-    gterms = []
-    for g in group_by.split(","):
-        qm = _QCOL_RE.match(g.strip())
-        if not qm or qm.group(1) not in (fa, da):
-            return None
-        gterms.append(("fact" if qm.group(1) == fa else "dim", qm.group(2)))
-    items: list[tuple] = []
-    keys_seen: list[tuple[str, str]] = []
-    for item in _split_top_level(sel):
-        item = item.strip()
-        qm = _QCOL_RE.match(item)
-        if qm:
-            if qm.group(1) not in (fa, da):
-                return None
-            side = "fact" if qm.group(1) == fa else "dim"
-            items.append(("key", side, qm.group(2)))
-            keys_seen.append((side, qm.group(2)))
-            continue
-        am = _STAR_AGG_RE.match(item)
-        if not am:
-            return None
-        agg, arg, alias = am.group(1).lower(), am.group(2), am.group(3)
-        if arg == "*":
-            if agg != "count":
-                return None
-            col = "*"
+    where = []
+    for c in where_terms:
+        _need(c["cls"] == "EqualTo")
+        src, col = ref(c["kids"][0])
+        _need(src > 0 if star else (src, col) in keys)
+        where.append((src, col, _literal(c["kids"][1])))
+    measures = {i.name for i in items if i.agg}
+    having = []
+    for c in having_terms:
+        if c["cls"] == "Not" and c["kids"][0]["cls"] == "EqualTo":
+            op, (left, right) = "!=", c["kids"][0]["kids"]
         else:
-            q, col = arg.split(".")
-            if q != fa:
-                return None  # only fact-side measures re-aggregate safely
-        items.append(("agg", agg, col, alias))
-    if sorted(keys_seen) != sorted(gterms):
-        return None
-    if not any(i[0] == "agg" for i in items):
-        return None
-    names = [i[2] if i[0] == "key" else i[3] for i in items]
-    if len(set(names)) != len(names):
-        return None
-    pres = _parse_presentation(
-        having_clause, order_clause, limit_clause,
-        [i[2] for i in items if i[0] == "key"],
-        {i[3] for i in items if i[0] == "agg"})
-    if pres is None:
-        return None
-    return (fact, dim, fkey, dkey, items, dim_where) + pres
-
-
-_STAR2_SHAPE_RE = re.compile(
-    r"^\s*SELECT\s+(.*?)\s+FROM\s+([A-Za-z_]\w*)\s+(?:AS\s+)?([A-Za-z_]\w*)"
-    r"\s+JOIN\s+([A-Za-z_]\w*)\s+(?:AS\s+)?([A-Za-z_]\w*)\s+ON\s+"
-    r"([A-Za-z_]\w*)\.([A-Za-z_]\w*)\s*=\s*([A-Za-z_]\w*)\.([A-Za-z_]\w*)"
-    r"\s+JOIN\s+([A-Za-z_]\w*)\s+(?:AS\s+)?([A-Za-z_]\w*)\s+ON\s+"
-    r"([A-Za-z_]\w*)\.([A-Za-z_]\w*)\s*=\s*([A-Za-z_]\w*)\.([A-Za-z_]\w*)"
-    r"(?:\s+WHERE\s+(.+?))?"
-    r"\s+GROUP\s+BY\s+(.+?)"
-    r"(?:\s+HAVING\s+(.+?))?"
-    r"(?:\s+ORDER\s+BY\s+(.+?))?"
-    r"(?:\s+LIMIT\s+(\d+))?\s*;?\s*$",
-    re.IGNORECASE | re.DOTALL)
-
-
-def parse_star2_agg_sql(text: str):
-    """Parse the restricted TWO-dimension star grammar
-    ``SELECT <d1.a | d2.b | f.col | AGG(f.m) AS alias>... FROM <fact> f
-    JOIN <dim1> d1 ON f.k1 = d1.dk1 JOIN <dim2> d2 ON f.k2 = d2.dk2
-    [WHERE <dim-qualified equality conjunction>] GROUP BY <the non-agg
-    select items> [HAVING ...] [ORDER BY ...] [LIMIT n]`` into
-    (fact, dim1, dim2, k1, dk1, k2, dk2, items, where1, where2, having,
-    order, limit) — item sides are "fact"/"dim1"/"dim2" — or None.
-    The presentation clauses follow ``_parse_presentation`` (alias-only
-    HAVING, served-name ORDER BY, key-complete-ORDER-BY-gated LIMIT).
-
-    Single-dim rules apply per join: each ON pairs the fact alias with
-    ITS dim's alias (a dim1-dim2 ON term would not be an eager-
-    aggregation star and returns None), aliases are pairwise distinct,
-    measures are fact-side only, WHERE terms are dim-qualified
-    equalities (routed to their own dim), and output names are unique.
-    The two dim TABLES may coincide (role-playing dimensions) — sides
-    are tracked by alias throughout.
-    """
-    m = _STAR2_SHAPE_RE.match(text)
-    if not m:
-        return None
-    (sel, fact, fa, dim1, da1, l1q, l1c, r1q, r1c,
-     dim2, da2, l2q, l2c, r2q, r2c, where_clause, group_by,
-     having_clause, order_clause, limit_clause) = m.groups()
-    if len({fa, da1, da2}) != 3 or fact in (dim1, dim2):
-        return None
-    if {l1q, r1q} != {fa, da1} or {l2q, r2q} != {fa, da2}:
-        return None
-    k1, dk1 = (l1c, r1c) if l1q == fa else (r1c, l1c)
-    k2, dk2 = (l2c, r2c) if l2q == fa else (r2c, l2c)
-    where1: list[tuple[str, str]] = []
-    where2: list[tuple[str, str]] = []
-    if where_clause is not None:
-        for cond in _AND_RE.split(where_clause.strip()):
-            wm = _STAR_WHERE_RE.match(cond.strip())
-            if not wm or wm.group(1) not in (da1, da2):
-                return None  # only dim-side equality predicates commute
-            (where1 if wm.group(1) == da1 else where2).append(
-                (wm.group(2), wm.group(3)))
-    side_of = {fa: "fact", da1: "dim1", da2: "dim2"}
-    gterms = []
-    for g in group_by.split(","):
-        qm = _QCOL_RE.match(g.strip())
-        if not qm or qm.group(1) not in side_of:
-            return None
-        gterms.append((side_of[qm.group(1)], qm.group(2)))
-    items: list[tuple] = []
-    keys_seen: list[tuple[str, str]] = []
-    for item in _split_top_level(sel):
-        item = item.strip()
-        qm = _QCOL_RE.match(item)
-        if qm:
-            if qm.group(1) not in side_of:
-                return None
-            items.append(("key", side_of[qm.group(1)], qm.group(2)))
-            keys_seen.append((side_of[qm.group(1)], qm.group(2)))
-            continue
-        am = _STAR_AGG_RE.match(item)
-        if not am:
-            return None
-        agg, arg, alias = am.group(1).lower(), am.group(2), am.group(3)
-        if arg == "*":
-            if agg != "count":
-                return None
-            col = "*"
-        else:
-            q, col = arg.split(".")
-            if q != fa:
-                return None  # only fact-side measures re-aggregate safely
-        items.append(("agg", agg, col, alias))
-    if sorted(keys_seen) != sorted(gterms):
-        return None
-    if not any(i[0] == "agg" for i in items):
-        return None
-    names = [i[2] if i[0] == "key" else i[3] for i in items]
-    if len(set(names)) != len(names):
-        return None
-    pres = _parse_presentation(
-        having_clause, order_clause, limit_clause,
-        [i[2] for i in items if i[0] == "key"],
-        {i[3] for i in items if i[0] == "agg"})
-    if pres is None:
-        return None
-    return (fact, dim1, dim2, k1, dk1, k2, dk2, items,
-            where1, where2) + pres
-
-
-def _split_top_level(s: str) -> list[str]:
-    out, depth, cur = [], 0, []
-    for ch in s:
-        if ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        if ch == "," and depth == 0:
-            out.append("".join(cur))
-            cur = []
-        else:
-            cur.append(ch)
-    out.append("".join(cur))
-    return out
+            _need(c["cls"] in _CMP)
+            op, (left, right) = _CMP[c["cls"]], c["kids"]
+        (alias,) = _name(left)
+        _need(alias in measures)
+        having.append((alias, op, _literal(right, numeric=True)))
+    _need(all(c in names for c, _ in order))
+    _need(limit is None or {col for _, col in keys} <= {c for c, _ in order})
+    return Routable(tables[0], joins, items, where, having, order, limit)

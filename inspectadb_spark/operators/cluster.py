@@ -23,11 +23,14 @@ def connected_components(
     pairs: DataFrame,
     src: str = "d1",
     dst: str = "d2",
-    max_iters: int = 20,
+    max_iters: int = 64,
     unique_pairs: bool = False,
 ) -> DataFrame:
     """(node, component) for every node in the edge list; component = min
-    node id reachable. Deterministic for any edge order.
+    node id reachable. Deterministic for any edge order. A component of
+    diameter d converges in at most d + 1 rounds (a path of n nodes
+    numbered in order takes n); labels still changing after ``max_iters``
+    rounds raise RuntimeError instead of returning unconverged labels.
 
     ``unique_pairs=True`` skips the symmetrized edge list's dedup
     exchange: when the caller's pair generator emits each unordered pair
@@ -83,6 +86,11 @@ def connected_components(
         labels = new_labels
         if changed == 0:
             break
+    else:
+        raise RuntimeError(
+            "connected_components: labels still changing after "
+            f"max_iters={max_iters} rounds (a component's diameter exceeds "
+            "it); raise max_iters")
     return labels
 
 

@@ -32,6 +32,18 @@ def test_components_transitive_long_chain(spark):
     assert set(comps.values()) == {0}
 
 
+def test_components_unconverged_raises(spark):
+    # path 0-1-...-29: label 0 walks one hop per round, so the labels are
+    # still changing after 3 rounds; the default bound converges it
+    pairs = spark.createDataFrame([(i, i + 1) for i in range(29)],
+                                  ["d1", "d2"])
+    with pytest.raises(RuntimeError, match="max_iters=3"):
+        connected_components(pairs, max_iters=3)
+    comps = {r["node"]: r["comp"]
+             for r in connected_components(pairs).collect()}
+    assert len(comps) == 30 and set(comps.values()) == {0}
+
+
 def test_dedup_keep_canonical(spark):
     docs = spark.createDataFrame(
         [(i, f"text{i}") for i in range(8)], ["doc_id", "text"]

@@ -9,7 +9,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from inspectadb_spark.engine import Engine
+from inspectadb_spark.engine import Engine, Item, Routable, parse_routable
 from inspectadb_spark.operators.mv import AggRequest, MVDef
 from tests.conftest import SF_DIR
 
@@ -28,6 +28,12 @@ def engine(spark, tmp_path_factory):
         "orders",
     )
     return eng
+
+
+@pytest.fixture(scope="module")
+def parse(spark):
+    """The SQL front-end's matcher on one text."""
+    return lambda text: parse_routable(spark, text)
 
 
 REQ = AggRequest(
@@ -96,20 +102,18 @@ def test_sql_routed_falls_back_to_full_sql(engine):
     assert prov2 == "sql"
 
 
-def test_parse_agg_sql_rejects_untrusted_shapes():
-    from inspectadb_spark.engine import parse_agg_sql
-
-    assert parse_agg_sql("SELECT a, SUM(b) AS s FROM t GROUP BY a") is not None
+def test_parse_agg_sql_rejects_untrusted_shapes(parse):
+    assert parse("SELECT a, SUM(b) AS s FROM t GROUP BY a") is not None
     # key listed in SELECT but not GROUP BY (and vice versa)
-    assert parse_agg_sql("SELECT a, b, SUM(c) AS s FROM t GROUP BY a") is None
+    assert parse("SELECT a, b, SUM(c) AS s FROM t GROUP BY a") is None
     # expression keys, missing alias, non-count star
-    assert parse_agg_sql(
+    assert parse(
         "SELECT trunc(a), SUM(b) AS s FROM t GROUP BY trunc(a)") is None
     # COUNT(DISTINCT col) PARSES since round 9 (VERDICT r8 item 7) — the
     # MV layer serves it only for declared grain keys; every other
     # DISTINCT shape still refuses (test_parse_agg_sql_distinct_refusals)
-    assert parse_agg_sql("SELECT a, SUM(b) FROM t GROUP BY a") is None
-    assert parse_agg_sql("SELECT a, SUM(*) AS s FROM t GROUP BY a") is None
+    assert parse("SELECT a, SUM(b) FROM t GROUP BY a") is None
+    assert parse("SELECT a, SUM(*) AS s FROM t GROUP BY a") is None
 
 
 def test_apply_changes_upsert_delete_and_invalidation(spark,
@@ -334,13 +338,14 @@ def test_apply_changes_versions_and_derived_grain_refresh(
     assert eng2.table("orders").count() == eng.table("orders").count()
 
 
-def test_parse_agg_sql_rejects_duplicate_aliases_and_counts_nonnull():
-    from inspectadb_spark.engine import parse_agg_sql
-
-    assert parse_agg_sql(
+def test_parse_agg_sql_rejects_duplicate_aliases_and_counts_nonnull(parse):
+    assert parse(
         "SELECT a, SUM(b) AS s, COUNT(*) AS s FROM t GROUP BY a") is None
-    parsed = parse_agg_sql("SELECT a, COUNT(b) AS n FROM t GROUP BY a")
-    assert parsed is not None and parsed[1].measures["n"] == ("count", "b")
+    # Spark resolves names case-insensitively: s and S collide too
+    assert parse(
+        "SELECT a, SUM(b) AS s, COUNT(*) AS S FROM t GROUP BY a") is None
+    parsed = parse("SELECT a, COUNT(b) AS n FROM t GROUP BY a")
+    assert parsed is not None and parsed.items[1] == Item("n", 0, "count", "b")
 
 
 def test_apply_changes_crash_window_leaves_committed_version(
@@ -410,45 +415,40 @@ def test_sql_routed_where_key_and_having(engine):
     assert _rows(routed3) == _rows(direct3) and routed3.count() > 0
 
 
-def test_parse_agg_sql_predicate_safety_rules():
+def test_parse_agg_sql_predicate_safety_rules(parse):
     """The refuse-by-default rule survives the grammar growth: anything
     not PROVABLY key-equality WHERE / alias-comparison HAVING rejects."""
-    from inspectadb_spark.engine import parse_agg_sql
-
-    ok = parse_agg_sql("SELECT a, SUM(b) AS s FROM t "
-                       "WHERE a = 7 GROUP BY a HAVING s > 5")
+    ok = parse("SELECT a, SUM(b) AS s FROM t "
+               "WHERE a = 7 GROUP BY a HAVING s > 5")
     assert ok is not None
-    table, req, where, having, order, limit, sel_order = ok
-    assert where == ["a = 7"] and having == ["s > 5"]
-    assert order == [] and limit is None
+    assert ok.where == [(0, "a", 7)] and ok.having == [("s", ">", 5)]
+    assert ok.order == [] and ok.limit is None
     # WHERE on a non-key column -> not routable
-    assert parse_agg_sql("SELECT a, SUM(b) AS s FROM t "
-                         "WHERE b = 7 GROUP BY a") is None
+    assert parse("SELECT a, SUM(b) AS s FROM t "
+                 "WHERE b = 7 GROUP BY a") is None
     # non-equality WHERE -> not routable
-    assert parse_agg_sql("SELECT a, SUM(b) AS s FROM t "
-                         "WHERE a > 7 GROUP BY a") is None
+    assert parse("SELECT a, SUM(b) AS s FROM t "
+                 "WHERE a > 7 GROUP BY a") is None
     # OR -> not routable (only AND conjunctions parse)
-    assert parse_agg_sql("SELECT a, SUM(b) AS s FROM t "
-                         "WHERE a = 7 OR a = 8 GROUP BY a") is None
+    assert parse("SELECT a, SUM(b) AS s FROM t "
+                 "WHERE a = 7 OR a = 8 GROUP BY a") is None
     # HAVING on an undeclared alias / raw aggregate -> not routable
-    assert parse_agg_sql("SELECT a, SUM(b) AS s FROM t GROUP BY a "
-                         "HAVING x > 5") is None
-    assert parse_agg_sql("SELECT a, SUM(b) AS s FROM t GROUP BY a "
-                         "HAVING COUNT(*) > 5") is None
+    assert parse("SELECT a, SUM(b) AS s FROM t GROUP BY a "
+                 "HAVING x > 5") is None
+    assert parse("SELECT a, SUM(b) AS s FROM t GROUP BY a "
+                 "HAVING COUNT(*) > 5") is None
     # HAVING against a string literal -> not routable (aggs are numeric)
-    assert parse_agg_sql("SELECT a, SUM(b) AS s FROM t GROUP BY a "
-                         "HAVING s > 'x'") is None
+    assert parse("SELECT a, SUM(b) AS s FROM t GROUP BY a "
+                 "HAVING s > 'x'") is None
     # string-literal WHERE values parse
-    ok2 = parse_agg_sql("SELECT a, COUNT(*) AS n FROM t "
-                        "WHERE a = 'x y' GROUP BY a")
-    assert ok2 is not None and ok2[2] == ["a = 'x y'"]
+    ok2 = parse("SELECT a, COUNT(*) AS n FROM t "
+                "WHERE a = 'x y' GROUP BY a")
+    assert ok2 is not None and ok2.where == [(0, "a", "x y")]
 
 
-def test_sql_routed_order_by_limit(engine):
+def test_sql_routed_order_by_limit(engine, parse):
     """ORDER BY + LIMIT over served columns route as a deterministic
     post-agg top-k; LIMIT without ORDER BY refuses (nondeterministic)."""
-    from inspectadb_spark.engine import parse_agg_sql
-
     routed, prov = engine.sql_routed(
         "SELECT o_orderdate, o_orderstatus, SUM(o_totalprice) AS total "
         "FROM orders GROUP BY o_orderdate, o_orderstatus "
@@ -463,24 +463,25 @@ def test_sql_routed_order_by_limit(engine):
     assert [tuple(str(x) for x in r) for r in routed.collect()] == \
         [tuple(str(x) for x in r) for r in direct.collect()]
 
-    assert parse_agg_sql(
+    assert parse(
         "SELECT a, SUM(b) AS s FROM t GROUP BY a LIMIT 5") is None
-    assert parse_agg_sql(
+    assert parse(
         "SELECT a, SUM(b) AS s FROM t GROUP BY a ORDER BY zz") is None
     # LIMIT demands a TOTAL order: an ORDER BY that omits a group key can
     # tie at the cut, making the routed top-k diverge from plain SQL
     # (ADVICE r05) — refused; covering every key makes it deterministic.
-    assert parse_agg_sql(
+    assert parse(
         "SELECT a, SUM(b) AS s FROM t GROUP BY a ORDER BY s DESC LIMIT 3"
     ) is None
-    ok = parse_agg_sql("SELECT a, SUM(b) AS s FROM t GROUP BY a "
-                       "ORDER BY s DESC, a LIMIT 3")
-    assert ok is not None and ok[4] == [("s", True), ("a", False)] \
-        and ok[5] == 3
+    ok = parse("SELECT a, SUM(b) AS s FROM t GROUP BY a "
+               "ORDER BY s DESC, a LIMIT 3")
+    assert ok is not None and ok.order == [("s", True), ("a", False)] \
+        and ok.limit == 3
     # ORDER BY without LIMIT never needs the total order
-    ok2 = parse_agg_sql(
+    ok2 = parse(
         "SELECT a, SUM(b) AS s FROM t GROUP BY a ORDER BY s DESC")
-    assert ok2 is not None and ok2[4] == [("s", True)] and ok2[5] is None
+    assert ok2 is not None and ok2.order == [("s", True)] \
+        and ok2.limit is None
 
 
 def test_sql_routed_star_join(engine):
@@ -538,43 +539,42 @@ def test_sql_routed_star_join(engine):
     assert prov3 == "sql"
 
 
-def test_parse_star_agg_sql_rejects_unprovable_shapes():
-    from inspectadb_spark.engine import parse_star_agg_sql as p
-
-    ok = p("SELECT d.x, SUM(f.m) AS s FROM fact f JOIN dim d "
-           "ON f.k = d.k GROUP BY d.x")
-    assert ok == ("fact", "dim", "k", "k",
-                  [("key", "dim", "x"), ("agg", "sum", "m", "s")], [],
-                  [], [], None)
+def test_parse_star_agg_sql_rejects_unprovable_shapes(parse):
+    ok = parse("SELECT d.x, SUM(f.m) AS s FROM fact f JOIN dim d "
+               "ON f.k = d.k GROUP BY d.x")
+    assert ok == Routable("fact", [("dim", "k", "k")],
+                          [Item("x", 1, None, "x"), Item("s", 0, "sum", "m")],
+                          [], [], [], None)
     # dim-side equality WHERE parses (filter commutes with the inner
     # join); fact-side / non-equality / unqualified WHERE refuses
-    okw = p("SELECT d.x, SUM(f.m) AS s FROM fact f JOIN dim d "
-            "ON f.k = d.k WHERE d.region = 'EU' AND d.tier = 3 "
-            "GROUP BY d.x")
-    assert okw is not None and okw[5] == [("region", "'EU'"), ("tier", "3")]
-    assert p("SELECT d.x, SUM(f.m) AS s FROM fact f JOIN dim d "
-             "ON f.k = d.k WHERE f.m = 3 GROUP BY d.x") is None
-    assert p("SELECT d.x, SUM(f.m) AS s FROM fact f JOIN dim d "
-             "ON f.k = d.k WHERE d.tier > 3 GROUP BY d.x") is None
-    assert p("SELECT d.x, SUM(f.m) AS s FROM fact f JOIN dim d "
-             "ON f.k = d.k WHERE region = 'EU' GROUP BY d.x") is None
+    okw = parse("SELECT d.x, SUM(f.m) AS s FROM fact f JOIN dim d "
+                "ON f.k = d.k WHERE d.region = 'EU' AND d.tier = 3 "
+                "GROUP BY d.x")
+    assert okw is not None \
+        and okw.where == [(1, "region", "EU"), (1, "tier", 3)]
+    assert parse("SELECT d.x, SUM(f.m) AS s FROM fact f JOIN dim d "
+                 "ON f.k = d.k WHERE f.m = 3 GROUP BY d.x") is None
+    assert parse("SELECT d.x, SUM(f.m) AS s FROM fact f JOIN dim d "
+                 "ON f.k = d.k WHERE d.tier > 3 GROUP BY d.x") is None
+    assert parse("SELECT d.x, SUM(f.m) AS s FROM fact f JOIN dim d "
+                 "ON f.k = d.k WHERE region = 'EU' GROUP BY d.x") is None
     # reversed ON order still resolves the key sides
-    assert p("SELECT d.x, SUM(f.m) AS s FROM fact f JOIN dim d "
-             "ON d.dk = f.fk GROUP BY d.x")[2:4] == ("fk", "dk")
+    assert parse("SELECT d.x, SUM(f.m) AS s FROM fact f JOIN dim d "
+                 "ON d.dk = f.fk GROUP BY d.x").joins == [("dim", "fk", "dk")]
     # not provably routable: dim-side measure, unqualified cols, missing
     # alias, GROUP BY mismatch, LEFT JOIN, duplicate output names
-    assert p("SELECT d.x, SUM(d.m) AS s FROM f f2 JOIN d d2 "
-             "ON f2.k = d2.k GROUP BY d.x") is None
-    assert p("SELECT x, SUM(f.m) AS s FROM fact f JOIN dim d "
-             "ON f.k = d.k GROUP BY x") is None
-    assert p("SELECT d.x, SUM(f.m) FROM fact f JOIN dim d "
-             "ON f.k = d.k GROUP BY d.x") is None
-    assert p("SELECT d.x, SUM(f.m) AS s FROM fact f JOIN dim d "
-             "ON f.k = d.k GROUP BY d.x, d.y") is None
-    assert p("SELECT d.x, SUM(f.m) AS s FROM fact f LEFT JOIN dim d "
-             "ON f.k = d.k GROUP BY d.x") is None
-    assert p("SELECT d.x, SUM(f.x) AS x FROM fact f JOIN dim d "
-             "ON f.k = d.k GROUP BY d.x") is None
+    assert parse("SELECT d.x, SUM(d.m) AS s FROM f f2 JOIN d d2 "
+                 "ON f2.k = d2.k GROUP BY d.x") is None
+    assert parse("SELECT x, SUM(f.m) AS s FROM fact f JOIN dim d "
+                 "ON f.k = d.k GROUP BY x") is None
+    assert parse("SELECT d.x, SUM(f.m) FROM fact f JOIN dim d "
+                 "ON f.k = d.k GROUP BY d.x") is None
+    assert parse("SELECT d.x, SUM(f.m) AS s FROM fact f JOIN dim d "
+                 "ON f.k = d.k GROUP BY d.x, d.y") is None
+    assert parse("SELECT d.x, SUM(f.m) AS s FROM fact f LEFT JOIN dim d "
+                 "ON f.k = d.k GROUP BY d.x") is None
+    assert parse("SELECT d.x, SUM(f.x) AS x FROM fact f JOIN dim d "
+                 "ON f.k = d.k GROUP BY d.x") is None
 
 
 def test_star_route_serves_post_change_values(spark, tmp_path_factory):
@@ -611,7 +611,7 @@ def test_star_route_serves_post_change_values(spark, tmp_path_factory):
     assert sum(n_after.values()) == sum(n_before.values()) - 1
 
 
-def test_star_route_refuses_ambiguous_dim_attr_name(engine):
+def test_star_route_refuses_ambiguous_dim_attr_name(engine, parse):
     """A dim attr named like a fact grain column would make the post-join
     groupBy ambiguous — the route refuses and plain SQL serves it."""
     df, prov = engine.sql_routed(
@@ -620,27 +620,28 @@ def test_star_route_refuses_ambiguous_dim_attr_name(engine):
         "GROUP BY c.c_custkey")
     # c_custkey != o_custkey, so this particular text routes fine; the
     # ambiguous case needs identical names on both sides:
-    from inspectadb_spark.engine import parse_star_agg_sql
-
-    star = parse_star_agg_sql(
+    star = parse(
         "SELECT d.k, SUM(f.m) AS s FROM fact f JOIN dim d ON f.k = d.k "
         "GROUP BY d.k")
     assert star is not None  # parses...
-    fact, dim, fkey, dkey, items, dim_where = star[:6]
-    assert fkey == "k" and [i for i in items if i[0] == "key"][0][2] == "k"
+    assert star.joins[0][1] == "k" and star.items[0] == Item("k", 1, None, "k")
     # ...but the engine refuses it (name collision with the grain key)
-    eng_star = engine._route_star(("orders", "customer", "o_custkey",
-                                   "c_custkey", [("key", "dim", "o_custkey"),
-                                                 ("agg", "count", "*", "n")],
-                                   []))
+    eng_star = engine._route_star(parse(
+        "SELECT c.o_custkey, COUNT(*) AS n "
+        "FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey "
+        "GROUP BY c.o_custkey"))
     assert eng_star is None
+    # ...in any letter case (Spark resolves names case-insensitively)
+    assert engine._route_star(parse(
+        "SELECT c.O_CUSTKEY, COUNT(*) AS n "
+        "FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey "
+        "GROUP BY c.O_CUSTKEY")) is None
     # unknown dim column in WHERE: refused so plain SQL raises the real
     # analysis error instead of the route inventing one
-    eng_star2 = engine._route_star(("orders", "customer", "o_custkey",
-                                    "c_custkey",
-                                    [("key", "dim", "c_mktsegment"),
-                                     ("agg", "count", "*", "n")],
-                                    [("no_such_col", "1")]))
+    eng_star2 = engine._route_star(parse(
+        "SELECT c.c_mktsegment, COUNT(*) AS n "
+        "FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey "
+        "WHERE c.no_such_col = 1 GROUP BY c.c_mktsegment"))
     assert eng_star2 is None
 
 
@@ -740,12 +741,10 @@ def test_sql_routed_star2_join(engine):
     assert _rows(routed2) == _rows(direct2)
 
 
-def test_star2_refusals(engine):
+def test_star2_refusals(engine, parse):
     """Two-dim star refuse-by-default: undeclared key set -> plain SQL;
     fact-side WHERE, dim-dim ON terms and fact-side grain/attr name
     collisions never route."""
-    from inspectadb_spark.engine import parse_star2_agg_sql as p2
-
     # no MV declares (l_orderkey, l_suppkey) on this engine: plain SQL
     _, prov = engine.sql_routed(
         "SELECT o.o_orderstatus, s.s_nationkey, COUNT(*) AS n "
@@ -754,44 +753,41 @@ def test_star2_refusals(engine):
         "GROUP BY o.o_orderstatus, s.s_nationkey")
     assert prov == "sql"
     # fact-side WHERE is not provably routable
-    assert p2("SELECT d.a, e.b, COUNT(*) AS n FROM f t "
-              "JOIN d1 d ON t.k1 = d.dk JOIN d2 e ON t.k2 = e.dk "
-              "WHERE t.x = 1 GROUP BY d.a, e.b") is None
+    assert parse("SELECT d.a, e.b, COUNT(*) AS n FROM f t "
+                 "JOIN d1 d ON t.k1 = d.dk JOIN d2 e ON t.k2 = e.dk "
+                 "WHERE t.x = 1 GROUP BY d.a, e.b") is None
     # a dim1-dim2 ON term is not an eager-aggregation star
-    assert p2("SELECT d.a, e.b, COUNT(*) AS n FROM f t "
-              "JOIN d1 d ON t.k1 = d.dk JOIN d2 e ON d.k2 = e.dk "
-              "GROUP BY d.a, e.b") is None
+    assert parse("SELECT d.a, e.b, COUNT(*) AS n FROM f t "
+                 "JOIN d1 d ON t.k1 = d.dk JOIN d2 e ON d.k2 = e.dk "
+                 "GROUP BY d.a, e.b") is None
     # measures must be fact-side
-    assert p2("SELECT d.a, e.b, SUM(d.m) AS s FROM f t "
-              "JOIN d1 d ON t.k1 = d.dk JOIN d2 e ON t.k2 = e.dk "
-              "GROUP BY d.a, e.b") is None
+    assert parse("SELECT d.a, e.b, SUM(d.m) AS s FROM f t "
+                 "JOIN d1 d ON t.k1 = d.dk JOIN d2 e ON t.k2 = e.dk "
+                 "GROUP BY d.a, e.b") is None
     # parses, but a dim attr named like the grain key refuses in-route
-    star = p2("SELECT d.k1, e.b, COUNT(*) AS n FROM f t "
-              "JOIN d1 d ON t.k1 = d.dk JOIN d2 e ON t.k2 = e.dk "
-              "GROUP BY d.k1, e.b")
+    star = parse("SELECT d.k1, e.b, COUNT(*) AS n FROM f t "
+                 "JOIN d1 d ON t.k1 = d.dk JOIN d2 e ON t.k2 = e.dk "
+                 "GROUP BY d.k1, e.b")
     assert star is not None
-    assert engine._route_star2(
-        ("lineitem", "part", "supplier", "l_partkey", "p_partkey",
-         "l_suppkey", "s_suppkey",
-         [("key", "dim1", "l_partkey"), ("agg", "count", "*", "n")],
-         [], [])) is None
+    assert engine._route_star(parse(
+        "SELECT p.l_partkey, COUNT(*) AS n "
+        "FROM lineitem l JOIN part p ON l.l_partkey = p.p_partkey "
+        "JOIN supplier s ON l.l_suppkey = s.s_suppkey "
+        "GROUP BY p.l_partkey")) is None
     # unknown WHERE column on its dim: refused so plain SQL raises
-    assert engine._route_star2(
-        ("lineitem", "part", "supplier", "l_partkey", "p_partkey",
-         "l_suppkey", "s_suppkey",
-         [("key", "dim1", "p_brand"), ("agg", "count", "*", "n")],
-         [("no_such_col", "1")], [])) is None
+    assert engine._route_star(parse(
+        "SELECT p.p_brand, COUNT(*) AS n "
+        "FROM lineitem l JOIN part p ON l.l_partkey = p.p_partkey "
+        "JOIN supplier s ON l.l_suppkey = s.s_suppkey "
+        "WHERE p.no_such_col = 1 GROUP BY p.p_brand")) is None
 
 
-def test_star_route_having_order_limit(engine):
+def test_star_route_having_order_limit(engine, parse):
     """HAVING + ORDER BY + LIMIT on routed star aggregates (VERDICT r7
     item 6): the presentation clauses are pure post-aggregation ops over
     served columns, applied identically to the routed and plain-SQL
     forms; LIMIT routes only under a key-complete ORDER BY and HAVING
     only over declared aggregate aliases."""
-    from inspectadb_spark.engine import parse_star_agg_sql as p
-    from inspectadb_spark.engine import parse_star2_agg_sql as p2
-
     engine.register_mv(
         MVDef(name="mv_orders_by_cust_h", keys=("o_custkey",),
               measures={"sum_tp": ("sum", "o_totalprice"),
@@ -824,24 +820,25 @@ def test_star_route_having_order_limit(engine):
     # key-complete ORDER BY (ties at the cut could diverge from plain SQL)
     base = ("SELECT d.x, SUM(f.m) AS s FROM fact f JOIN dim d "
             "ON f.k = d.k GROUP BY d.x")
-    assert p(base + " HAVING x > 3") is None
-    assert p(base + " HAVING SUM(m) > 3") is None
-    assert p(base + " LIMIT 5") is None
-    assert p(base + " ORDER BY s DESC LIMIT 5") is None
-    assert p(base + " ORDER BY zz") is None
-    ok = p(base + " HAVING s >= 0 AND s < 100 ORDER BY s DESC, x LIMIT 5")
-    assert ok is not None and ok[6] == ["s >= 0", "s < 100"] \
-        and ok[7] == [("s", True), ("x", False)] and ok[8] == 5
+    assert parse(base + " HAVING x > 3") is None
+    assert parse(base + " HAVING SUM(m) > 3") is None
+    assert parse(base + " LIMIT 5") is None
+    assert parse(base + " ORDER BY s DESC LIMIT 5") is None
+    assert parse(base + " ORDER BY zz") is None
+    ok = parse(base + " HAVING s >= 0 AND s < 100 ORDER BY s DESC, x LIMIT 5")
+    assert ok is not None \
+        and ok.having == [("s", ">=", 0), ("s", "<", 100)] \
+        and ok.order == [("s", True), ("x", False)] and ok.limit == 5
     # star2 carries the same discipline
     base2 = ("SELECT d.a, e.b, COUNT(*) AS n FROM f t "
              "JOIN d1 d ON t.k1 = d.dk JOIN d2 e ON t.k2 = e.dk "
              "GROUP BY d.a, e.b")
-    assert p2(base2 + " HAVING a > 3") is None
-    assert p2(base2 + " ORDER BY n DESC LIMIT 2") is None
-    ok2 = p2(base2 + " HAVING n > 1 ORDER BY n DESC, a, b LIMIT 2")
-    assert ok2 is not None and ok2[10] == ["n > 1"] \
-        and ok2[11] == [("n", True), ("a", False), ("b", False)] \
-        and ok2[12] == 2
+    assert parse(base2 + " HAVING a > 3") is None
+    assert parse(base2 + " ORDER BY n DESC LIMIT 2") is None
+    ok2 = parse(base2 + " HAVING n > 1 ORDER BY n DESC, a, b LIMIT 2")
+    assert ok2 is not None and ok2.having == [("n", ">", 1)] \
+        and ok2.order == [("n", True), ("a", False), ("b", False)] \
+        and ok2.limit == 2
 
 
 def test_star2_route_having_order_limit(engine):
@@ -922,21 +919,19 @@ def test_count_distinct_non_key_column_refuses_mv(engine):
     assert _rows(routed) == _rows(direct) and routed.count() > 0
 
 
-def test_parse_agg_sql_distinct_refusals():
+def test_parse_agg_sql_distinct_refusals(parse):
     """Grammar refusals: DISTINCT is routable ONLY as COUNT(DISTINCT
     <column>); every other DISTINCT shape falls through to plain SQL."""
-    from inspectadb_spark.engine import parse_agg_sql
-
-    ok = parse_agg_sql("SELECT a, COUNT(DISTINCT b) AS d FROM t GROUP BY a")
+    ok = parse("SELECT a, COUNT(DISTINCT b) AS d FROM t GROUP BY a")
     assert ok is not None
-    assert ok[1].measures == {"d": ("count_distinct", "b")}
-    assert parse_agg_sql(
+    assert ok.items[1] == Item("d", 0, "count_distinct", "b")
+    assert parse(
         "SELECT a, SUM(DISTINCT b) AS s FROM t GROUP BY a") is None
-    assert parse_agg_sql(
+    assert parse(
         "SELECT a, AVG(DISTINCT b) AS s FROM t GROUP BY a") is None
-    assert parse_agg_sql(
+    assert parse(
         "SELECT a, MIN(DISTINCT b) AS s FROM t GROUP BY a") is None
-    assert parse_agg_sql(
+    assert parse(
         "SELECT a, COUNT(DISTINCT *) AS s FROM t GROUP BY a") is None
 
 
@@ -963,3 +958,99 @@ def test_mv_name_collision_across_registries_raises(spark,
             GroupingSetMV(name="dup_name", keys=("o_orderstatus",),
                           sets=(("o_orderstatus",),),
                           measures={"n": ("count", "*")}), "orders")
+
+
+@pytest.fixture(scope="module")
+def spelling_engine(spark, tmp_path_factory):
+    """An engine with one flat MV and one star-grain MV on orders, plus a
+    fact/dim pair sharing the join column name ``k`` (for USING)."""
+    eng = Engine(spark, SF_DIR, str(tmp_path_factory.mktemp("eng_spell")))
+    measures = {"sum_tp": ("sum", "o_totalprice"), "cnt": ("count", "*"),
+                "cnt_tp": ("count", "o_totalprice")}
+    eng.register_mv(MVDef(name="mv_sp_status", keys=("o_orderstatus",),
+                          measures=measures), "orders")
+    eng.register_mv(MVDef(name="mv_sp_cust", keys=("o_custkey",),
+                          measures=measures), "orders")
+    eng.tables["fact_h"] = eng.table("orders").select(
+        F.col("o_custkey").alias("k"), "o_totalprice")
+    eng.tables["dim_h"] = eng.table("customer").select(
+        F.col("c_custkey").alias("k"), "c_mktsegment")
+    for name in ("fact_h", "dim_h"):
+        eng.tables[name].createOrReplaceTempView(name)
+    eng.register_mv(MVDef(name="mv_sp_k", keys=("k",),
+                          measures={"cnt": ("count", "*")}), "fact_h")
+    return eng
+
+
+FLAT_CANON = ("SELECT o_orderstatus, SUM(o_totalprice) AS total, "
+              "COUNT(*) AS n FROM orders GROUP BY o_orderstatus "
+              "HAVING n <> 0")
+STAR_CANON = ("SELECT c.c_mktsegment, SUM(o.o_totalprice) AS total, "
+              "COUNT(*) AS n FROM orders o "
+              "JOIN customer c ON o.o_custkey = c.c_custkey "
+              "GROUP BY c.c_mktsegment HAVING n <> 0")
+
+
+def _spellings(canon):
+    """The same statement written five other ways."""
+    return [
+        canon.replace("SELECT", "select").replace("FROM", "from")
+        .replace("JOIN", "join").replace(" ON ", " on ")
+        .replace("GROUP BY", "group by").replace("HAVING", "having"),
+        canon.replace(" AS total", " total").replace(" AS n", " n"),
+        canon.replace("COUNT(*)", "COUNT(1)"),
+        canon.replace(", SUM", ", -- the measures\n  SUM")
+        .replace(" FROM", "\nFROM")
+        .replace(" GROUP BY", " -- grain\nGROUP BY"),
+        canon.replace("<>", "!="),
+    ]
+
+
+def test_sql_routed_spellings_route_alike(spelling_engine):
+    """Every spelling Spark parses to one tree routes like the canonical
+    text: same provenance, same rows. Each canonical text is served twice
+    first, so its provenance is the cache hit; a spelling that reaches the
+    same routed plan hits that cache entry too."""
+    eng = spelling_engine
+    for canon, prov_want in ((FLAT_CANON, "cache"),
+                             (STAR_CANON, "star:cache")):
+        eng.sql_routed(canon)
+        want, prov = eng.sql_routed(canon)
+        assert prov == prov_want
+        rows = _rows(want)
+        for text in _spellings(canon):
+            got, prov = eng.sql_routed(text)
+            assert prov == prov_want, text
+            assert _rows(got) == rows, text
+
+
+def test_sql_routed_refuses_parse_tree_hazards(spelling_engine, parse):
+    """Texts whose parse tree could mislead the matcher run as plain SQL:
+    backquoted names (toJSON prints `d, x` like d.x), literals whose
+    printed value does not round-trip (binary, NULL), a non-default null
+    order, a hint, a CTE, a USING join and an aggregate FILTER. The
+    unhazarded neighbour of each routes, so the refusal is the hazard's."""
+    eng = spelling_engine
+    flat = ("SELECT o_orderstatus, COUNT(*) AS n FROM orders "
+            "GROUP BY o_orderstatus")
+    star = ("SELECT d.c_mktsegment, COUNT(*) AS n FROM fact_h f "
+            "JOIN dim_h d ON f.k = d.k GROUP BY d.c_mktsegment")
+    assert eng.sql_routed(flat)[1] != "sql"
+    assert eng.sql_routed(star)[1].startswith("star:")
+    hazards = [
+        flat.replace("GROUP BY o_orderstatus", "GROUP BY `o_orderstatus`"),
+        flat.replace("GROUP BY", "WHERE o_orderstatus = X'0A' GROUP BY"),
+        flat.replace("GROUP BY", "WHERE o_orderstatus = NULL GROUP BY"),
+        flat + " HAVING n > NULL",
+        flat + " ORDER BY n DESC NULLS FIRST, o_orderstatus",
+        flat + " ORDER BY o_orderstatus ASC NULLS LAST",
+        flat.replace("SELECT", "SELECT /*+ REPARTITION(2) */"),
+        "WITH x AS (SELECT 1 AS one) " + flat,
+        star.replace("ON f.k = d.k", "USING (k)"),
+        flat.replace("COUNT(*)", "COUNT(*) FILTER (WHERE o_totalprice > 0)"),
+    ]
+    for text in hazards:
+        assert eng.sql_routed(text)[1] == "sql", text
+    # the qualified-name forgery itself: `f, k` prints like f.k
+    assert parse("SELECT d.x, COUNT(*) AS n FROM fact f JOIN dim d "
+                 "ON `f, k` = d.k GROUP BY d.x") is None

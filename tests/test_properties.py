@@ -692,7 +692,8 @@ def test_star2_route_equals_direct_property(spark, tmp_path_factory,
     aggregate for ANY data: the dim multiplicities MULTIPLY (each grain
     partial appears once per matching dim1xdim2 row pair on both
     forms), NULL keys drop identically through both inner joins, and
-    per-dim WHERE filters commute."""
+    per-dim WHERE filters commute — driven through the full
+    ``sql_routed`` text front-end."""
     from inspectadb_spark.engine import Engine
     from inspectadb_spark.operators.mv import MVDef
 
@@ -708,16 +709,14 @@ def test_star2_route_equals_direct_property(spark, tmp_path_factory,
               measures={"s": ("sum", "m"), "c": ("count", "*"),
                         "cm": ("count", "m")}),
         "fact2_p")
-    w1 = [] if flt1 is None else [("a1", f"'{flt1}'")]
-    w2 = [] if flt2 is None else [("a2", f"'{flt2}'")]
-    served = eng._route_star2(
-        ("fact2_p", "dim1_p", "dim2_p", "k1", "dk", "k2", "dk",
-         [("key", "dim1", "a1"), ("key", "dim2", "a2"),
-          ("agg", "sum", "m", "s"), ("agg", "count", "*", "n"),
-          ("agg", "avg", "m", "a")],
-         w1, w2))
-    assert served is not None
-    routed, prov = served
+    where = [f"{c} = '{v}'" for c, v in (("d1.a1", flt1), ("d2.a2", flt2))
+             if v is not None]
+    sql = ("SELECT d1.a1, d2.a2, SUM(f.m) AS s, COUNT(*) AS n, AVG(f.m) AS a "
+           "FROM fact2_p f JOIN dim1_p d1 ON f.k1 = d1.dk "
+           "JOIN dim2_p d2 ON f.k2 = d2.dk "
+           + (f"WHERE {' AND '.join(where)} " if where else "")
+           + "GROUP BY d1.a1, d2.a2")
+    routed, prov = eng.sql_routed(sql)
     assert prov.startswith("star2:")
     direct = (fact
               .join(dim1.withColumnRenamed("dk", "__d1"),
@@ -750,17 +749,16 @@ _sql_fragments = st.lists(
 
 @settings(max_examples=300, deadline=None)
 @given(text=st.one_of(_sql_fragments, st.text(max_size=120)))
-def test_serving_grammar_parsers_never_raise(text):
-    """The restricted-grammar front-end is fed raw user SQL; on ANY
-    input — keyword soup, random unicode, half-matched shapes — every
-    parser must either return a parse or None (fall through to plain
-    Spark SQL), never raise. The refuse-by-default contract is only
+def test_serving_grammar_parsers_never_raise(spark, text):
+    """The SQL front-end is fed raw user SQL; on ANY input — keyword soup,
+    random unicode, half-matched shapes — the matcher must either return
+    a record or None (fall through to plain Spark SQL), never raise: a
+    text Spark cannot parse refuses on pyspark's CapturedException, and
+    every unmatched tree refuses. The refuse-by-default contract is only
     safe if refusal is total."""
-    from inspectadb_spark.engine import (
-        parse_agg_sql, parse_star2_agg_sql, parse_star_agg_sql)
+    from inspectadb_spark.engine import parse_routable
 
-    for p in (parse_agg_sql, parse_star_agg_sql, parse_star2_agg_sql):
-        p(text)  # must not raise; value unchecked
+    parse_routable(spark, text)  # must not raise; value unchecked
 
 
 # --------------------------------------------------------------------------

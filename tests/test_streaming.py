@@ -2076,7 +2076,7 @@ def test_s44_streaming_winnowing_registry(spark, tmp_path):
 # S43 the continuous-aggregate -> star-dashboard seam, two dims deep:
 # IncrementalAggregate maintains (user, type)-grain state from the
 # replayed stream; the Engine serves a TWO-dimension star SQL (user
-# bucket x type family) from that live state through _route_star2 —
+# bucket x type family) from that live state through _route_star —
 # never scanning the event history — and the answer must hash-equal the
 # direct batch join-then-aggregate over the full history.
 def test_s43_incremental_state_serves_star2(spark, replay_dir, tmp_path):
