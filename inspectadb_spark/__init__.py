@@ -15,7 +15,7 @@ Design principles (SURVEY.md §3.4, §4):
 """
 
 from inspectadb_spark.engine import Engine
-from inspectadb_spark.operators.mv import AggRequest, GroupingSetMV, MVDef
+from inspectadb_spark.operators.mv import AggRequest, MVDef
 from inspectadb_spark.operators.result_cache import ResultCache
 from inspectadb_spark.session import get_session, configure
 from inspectadb_spark.catalog import load_table, load_tables, register_views, TABLES
@@ -23,7 +23,6 @@ from inspectadb_spark.catalog import load_table, load_tables, register_views, TA
 __all__ = [
     "AggRequest",
     "Engine",
-    "GroupingSetMV",
     "MVDef",
     "ResultCache",
     "get_session",

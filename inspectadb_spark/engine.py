@@ -9,13 +9,16 @@ adds NO new semantics (each layer is independently tested and oracled):
         1. result cache  — exact-match plan fingerprint + input versions
                            (operators/result_cache.py); a hit costs a
                            metadata check + summary-sized read
-        2. MV routing    — SUM/COUNT/MIN/MAX/AVG rewrite against the
-                           cheapest compatible summary table
+        2. MV routing    — one pass over the summaries on the base
+                           table: an exact declared grain is a filter +
+                           projection, else SUM/COUNT/MIN/MAX/AVG
+                           re-aggregate the cheapest covering grain
                            (operators/mv.py; footer-row-count cost model)
         3. base table    — the direct aggregate
 
 The provenance string returned with every result ("cache" / "mv:<name>" /
-"base") makes the serving decision observable — the first thing an operator
+"gsmv:<name>" for a summary with several declared grains / "base") makes
+the serving decision observable — the first thing an operator
 asks when a dashboard slows down. Correctness does not depend on the layer
 chosen: the cache key proves byte-identical inputs + an identical plan, and
 MV routing is the algebra hash-verified by q239's oracle.
@@ -58,8 +61,7 @@ from pyspark.sql import functions as F
 
 from inspectadb_spark.catalog import load_tables
 from inspectadb_spark.operators.cdc import latest_per_key
-from inspectadb_spark.operators.mv import _DEC, AggRequest, GroupingSetMV
-from inspectadb_spark.operators.mv import MVDef, _derivable
+from inspectadb_spark.operators.mv import _DEC, AggRequest, MVDef, _derivable
 from inspectadb_spark.operators.mv import route as _mv_route
 from inspectadb_spark.operators.result_cache import ResultCache
 from inspectadb_spark.versioned import commit_versioned, read_current
@@ -84,7 +86,6 @@ class Engine:
         self.cache = ResultCache(spark, os.path.join(work_dir, "result_cache"))
         # name -> (def, path, base_table, base_builder-or-None)
         self._mvs: dict[str, tuple] = {}
-        self._gs_mvs: dict[str, tuple] = {}
         self._table_version: dict[str, int] = {}
         self._load_committed_tables()
         for name, df in self.tables.items():
@@ -127,8 +128,10 @@ class Engine:
         HAVING, ORDER BY and LIMIT then apply to the routed result: all
         three are pure post-aggregation operations over served columns
         (LIMIT only under a key-complete ORDER BY, a total order), so the
-        result is positionally identical to plain-SQL execution."""
-        q = parse_routable(self.spark, text)
+        result is positionally identical to plain-SQL execution. A text
+        Spark cannot parse raises Spark's ParseException from its one
+        parse."""
+        q = _parse(self.spark, text)
         served = None
         if q is not None and (
                 {q.fact, *(j[0] for j in q.joins)} <= self.tables.keys()):
@@ -176,11 +179,11 @@ class Engine:
         that broadcast dim before its join (it commutes with inner joins).
 
         Refuse-by-default: returns None (plain Spark SQL serves the text)
-        unless an MV over the fact DECLARES the grain keys with derivable
-        measures, no dim attr shares its name with a grain column (the
-        post-join groupBy would be ambiguous), and every WHERE column
-        exists on its dim (so plain SQL raises the real analysis error).
-        The fact table is then never scanned."""
+        unless an MV over the fact declares a grain covering the grain
+        keys with derivable measures, no dim attr shares its name with a
+        grain column (the post-join groupBy would be ambiguous), and every
+        WHERE column exists on its dim (so plain SQL raises the real
+        analysis error). The fact table is then never scanned."""
         attrs = [[i.col for i in q.items if i.agg is None and i.src == n]
                  for n in range(len(q.joins) + 1)]
         dim_attrs = [a for per_dim in attrs[1:] for a in per_dim]
@@ -194,8 +197,8 @@ class Engine:
         for i in aggs:
             split = ("sum", "count") if i.agg == "avg" else (i.agg,)
             gm.update({f"__{a}_{i.name}": (a, i.col) for a in split})
-        if not any(bt == q.fact and grain_keys <= set(mv.keys)
-                   and _derivable(gm, mv.measures)
+        if not any(bt == q.fact and _derivable(gm, mv.measures)
+                   and any(grain_keys <= set(g) for g in mv.grains)
                    for mv, _path, bt, _b in self._mvs.values()):
             return None
         dims = [self.tables[d] for d, _, _ in q.joins]
@@ -232,40 +235,26 @@ class Engine:
     # -- summary tables ----------------------------------------------------
     def register_mv(self, mv: MVDef, base_table: str,
                     base_builder=None) -> None:
-        """Register + refresh a summary over ``base_table``. An optional
-        ``base_builder(df) -> df`` pre-projects derived grain columns
-        (e.g. ship_day) before the MV groupBy; it is REMEMBERED so every
-        later refresh (manual or apply_changes-triggered) rebuilds from
-        the same derived input."""
-        if mv.name in self._gs_mvs:
+        """Register + refresh a summary over ``base_table`` at its declared
+        grains. An optional ``base_builder(df) -> df`` pre-projects derived
+        grain columns (e.g. ship_day) before the MV groupBy; it is
+        REMEMBERED so every later refresh (manual or
+        apply_changes-triggered) rebuilds from the same derived input."""
+        if mv.name in self._mvs and self._mvs[mv.name][0] != mv:
             raise ValueError(
-                f"MV name {mv.name!r} already registered as a grouping-sets "
-                "MV: the two registries share the storage path, so a reused "
-                "name would serve one definition from the other's parquet")
+                f"MV name {mv.name!r} already registered with a different "
+                "definition: the name is the storage path, so a reused name "
+                "would serve one definition from the other's parquet")
         path = os.path.join(self.work_dir, "mv", mv.name)
         self._mvs[mv.name] = (mv, path, base_table, base_builder)
         self.refresh_mv(mv.name)
 
     def refresh_mv(self, name: str) -> None:
-        reg = self._gs_mvs if name in self._gs_mvs else self._mvs
-        mv, path, base_table, base_builder = reg[name]
+        mv, path, base_table, base_builder = self._mvs[name]
         base = self.tables[base_table]
         if base_builder is not None:
             base = base_builder(base)
         mv.store(base, path)
-
-    def register_grouping_mv(self, mv: GroupingSetMV, base_table: str,
-                             base_builder=None) -> None:
-        """Register + refresh a multi-grain (grouping-sets) summary. Exact
-        declared grains serve as filter+projection with zero aggregation."""
-        if mv.name in self._mvs:
-            raise ValueError(
-                f"MV name {mv.name!r} already registered as a flat MV: the "
-                "two registries share the storage path, so a reused name "
-                "would serve one definition from the other's parquet")
-        path = os.path.join(self.work_dir, "mv", mv.name)
-        self._gs_mvs[mv.name] = (mv, path, base_table, base_builder)
-        self.refresh_mv(mv.name)
 
     # -- CDC apply ---------------------------------------------------------
     def apply_changes(self, table: str, changes: DataFrame,
@@ -300,10 +289,9 @@ class Engine:
             # caches keyed on their files) can never serve pre-change
             # values; pass False to keep MVs stale-until-refresh (the
             # deferred-refresh operating mode)
-            for reg in (self._mvs, self._gs_mvs):
-                for name, entry in reg.items():
-                    if entry[2] == table:
-                        self.refresh_mv(name)
+            for name, entry in self._mvs.items():
+                if entry[2] == table:
+                    self.refresh_mv(name)
 
     # -- layered aggregate serving ----------------------------------------
     def aggregate(self, base_table: str, req: AggRequest,
@@ -313,22 +301,11 @@ class Engine:
         base = self.tables[base_table]
         if base_builder is not None:
             base = base_builder(base)
-        routed, provenance = None, None
-        # grouping-set MVs first: an exact-grain hit is a pure filter
-        # (cheaper than any re-aggregating route)
-        for n, (gs, path, bt, _) in self._gs_mvs.items():
-            if bt != base_table:
-                continue
-            ans = gs.answer(self.spark, path, req)
-            if ans is not None:
-                routed, provenance = ans, f"gsmv:{n}"
-                break
-        if routed is None:
-            mvs = {n: (mv, path)
-                   for n, (mv, path, bt, _) in self._mvs.items()
-                   if bt == base_table}
-            routed, used = _mv_route(self.spark, req, mvs, base)
-            provenance = f"mv:{used}" if used else "base"
+        mvs = {n: (mv, path) for n, (mv, path, bt, _) in self._mvs.items()
+               if bt == base_table}
+        routed, used = _mv_route(self.spark, req, mvs, base)
+        provenance = "base" if used is None else (
+            f"{'mv' if mvs[used][0].sets is None else 'gsmv'}:{used}")
         if not use_cache:
             return routed, provenance
         stored, hit = self.cache.get_or_compute(routed)
@@ -478,16 +455,22 @@ def parse_routable(spark: SparkSession, text: str) -> Routable | None:
     round-trip (only integer, long, double, decimal and string pass), and
     hints, CTEs, USING joins, FILTER clauses and every other construct,
     which fall out as unmatched tree nodes."""
+    try:
+        return _parse(spark, text)
+    except CapturedException:
+        return None  # not parseable
+
+
+def _parse(spark: SparkSession, text: str) -> Routable | None:
+    """``parse_routable``, except that a text Spark cannot parse raises
+    the parser's exception: pyspark logs every captured parse failure at
+    ERROR with its Java trace, so ``sql_routed`` parses a text once."""
     if "`" in text:
         return None
+    plan = spark._jsparkSession.sessionState().sqlParser().parsePlan(text)
     try:
-        plan = spark._jsparkSession.sessionState().sqlParser().parsePlan(text)
-        flat = json.loads(plan.toJSON())
-    except CapturedException:
-        return None  # not parseable: plain spark.sql raises the real error
-    try:
-        return _match(_tree(flat))
-    except _Refuse:
+        return _match(_tree(json.loads(plan.toJSON())))
+    except (CapturedException, _Refuse):
         return None
 
 

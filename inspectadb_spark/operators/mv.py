@@ -1,17 +1,23 @@
-"""Materialized-view (summary-table) definition and aggregate-query routing.
+"""Summary tables: one definition, declared grains, and aggregate routing.
 
 The continuous-aggregate story has two halves. The *maintenance* half —
-keeping a pre-aggregated table up to date as the base table changes — lives
-in ``streaming/incremental.py`` (exactly-once additive merge) and
-``operators/cdc.py`` (batch merge). This module is the *routing* half: given
-an aggregate request, answer it from a compatible summary table instead of
-re-scanning the fact table.
+keeping a pre-aggregated table up to date as the base table changes — is
+``MVDef.store`` (batch refresh), ``streaming/incremental.py``
+(exactly-once additive merge from a stream) and ``operators/cdc.py``
+(batch merge). This module is the *routing* half: given an aggregate
+request, answer it from a compatible summary table instead of re-scanning
+the fact table. Both halves speak one measure vocabulary, ``KINDS``: each
+kind's partial aggregate over base rows and its merge over partials.
 
-Rewrite algebra (the classic summary-table containment rules):
+A summary (``MVDef``) stores its measures at one or more declared grains.
+Several grains keep ``grouping_id`` as the grain discriminator, so a real
+NULL key value can never be confused with an aggregated-away key.
 
-- the request's group keys must each be an MV key, or an expression over MV
-  keys (e.g. ``month`` derived from a daily key) — coarser rollups of the
-  stored grain;
+Rewrite algebra (the classic summary-table containment rules), per grain:
+
+- the request's group keys must each be a grain column, or an expression
+  over grain columns (e.g. ``month`` derived from a daily key) — coarser
+  rollups of the stored grain;
 - ``SUM(x)``   -> ``SUM(mv.sum_x)``     (sums are re-additive)
 - ``COUNT(*)`` -> ``SUM(mv.cnt)``; ``COUNT(x)`` -> ``SUM(mv.cnt_x)``
   (a stored ``count`` over a column counts NON-NULLs, SQL semantics)
@@ -21,12 +27,16 @@ Rewrite algebra (the classic summary-table containment rules):
   requires the stored non-null count of the SAME column (an MV without
   ``(count, x)`` simply refuses to route AVG(x))
 
+A request whose keys are exactly a declared grain (plain columns, no
+distinct count) needs no re-aggregation at all: grain rows are unique per
+key, so it is served as a filter plus a projection of the stored columns.
+
 Non-decomposable aggregates (exact percentiles, DISTINCT over arbitrary
 expressions) are deliberately NOT routable — ``route`` falls back to the
 base table, which is the correct answer, not an approximation. The ONE
-exception is ``COUNT(DISTINCT k)`` where ``k`` is a declared grain KEY of
-the summary: the grain rows enumerate every distinct key combination of
-the base, so re-counting distinct ``k`` over them is structurally exact
+exception is ``COUNT(DISTINCT k)`` where ``k`` is a column of the serving
+grain: the grain rows enumerate every distinct key combination of the
+base, so re-counting distinct ``k`` over them is structurally exact
 (no stored measure involved). (Mergeable sketches for arbitrary distinct
 counts are the separate ``operators/sketches.py`` surface.)
 
@@ -43,6 +53,7 @@ sums regardless of partial-aggregation order.
 
 from __future__ import annotations
 
+import glob
 import os
 from dataclasses import dataclass, field
 
@@ -53,6 +64,33 @@ from inspectadb_spark.versioned import commit_versioned, read_current
 
 _DEC = "decimal(18,6)"
 
+# kind -> (partial agg sql over source expr, merge agg sql over partial col):
+# the one measure vocabulary of summaries and IncrementalAggregate
+KINDS = {
+    "count": ("COUNT({src})", "SUM({c})"),
+    "sum": ("SUM(CAST({src} AS DECIMAL(18,6)))", "SUM({c})"),
+    # 12dp exact sum: for products of two 6dp-quantized quantities (e.g.
+    # the p² / p·y calibration moments of q324 / S46), whose exact value
+    # carries 12 decimal places — the 6dp "sum" kind would silently
+    # round each term. DECIMAL(38,12) leaves 26 integer digits, so the
+    # additive merge cannot overflow at any realistic state size.
+    "sum12": ("SUM(CAST({src} AS DECIMAL(38,12)))", "SUM({c})"),
+    "min": ("MIN({src})", "MIN({c})"),
+    "max": ("MAX({src})", "MAX({c})"),
+    # distinct-set union: partial = this batch's distinct values, merge =
+    # dedup'd union of stored set and batch set. Mergeable like a sketch
+    # but exact; state per group is the distinct-value set, so use it for
+    # bounded-cardinality domains (the incremental inverted-index /
+    # audience-membership pattern). Stored sorted so state bytes are
+    # canonical across merge orders.
+    "set": (
+        "array_sort(collect_set({src}))",
+        "array_sort(array_distinct(flatten(collect_list({c}))))",
+    ),
+}
+# served output types; every other kind keeps its stored type
+_OUT = {"count": "bigint", "sum": "double"}
+
 
 # -- crash-safe MV storage ---------------------------------------------------
 # MV refreshes commit through ``versioned.commit_versioned`` like every other
@@ -62,42 +100,68 @@ _DEC = "decimal(18,6)"
 
 def resolve_mv_path(path: str) -> str | None:
     """The directory a reader should scan for this MV, or None when no
-    refresh has ever committed (route()/answer() then fall back to base —
-    a partially written summary is never silently aggregated)."""
+    refresh has ever committed (route() then falls back to base — a
+    partially written summary is never silently aggregated)."""
     _, d, _ = read_current(path)
-    if d is not None and os.path.exists(d):
-        return d
-    # legacy in-place layout: only routable once fully committed
-    if os.path.exists(os.path.join(path, "_SUCCESS")):
-        return path
-    return None
+    return d if d is not None and os.path.exists(d) else None
 
 
 @dataclass(frozen=True)
 class MVDef:
     """A summary-table definition over a base table.
 
-    measures: out_col -> (agg, base_expr) with agg in {sum, count, min, max}.
+    measures: out_col -> (kind, base_expr) with kind in ``KINDS``.
     ``(count, "*")`` counts rows; ``(count, col)`` counts non-NULLs of the
     column (SQL COUNT semantics — the distinction is what makes routed
     AVG correct under NULLs).
+
+    sets: the declared grains, each a subset of ``keys``; None means the
+    one grain ``keys``. Several grains are one ``groupingSets`` pass,
+    stored partitioned by ``grouping_id`` so a grain read prunes to its
+    own files.
     """
 
     name: str
     keys: tuple[str, ...]
     measures: dict[str, tuple[str, str]] = field(hash=False)
+    sets: tuple[tuple[str, ...], ...] | None = None
+
+    @property
+    def grains(self) -> tuple[tuple[str, ...], ...]:
+        return (self.keys,) if self.sets is None else self.sets
+
+    def mask(self, grain: tuple[str, ...]) -> int:
+        """Spark/ANSI grouping_id: bit per key, FIRST key = MSB; bit set =
+        key aggregated away."""
+        m = 0
+        for k in self.keys:
+            m = (m << 1) | (0 if k in grain else 1)
+        return m
 
     def build(self, base: DataFrame) -> DataFrame:
-        return base.groupBy(*[F.col(k) for k in self.keys]).agg(
-            *_measure_aggs(self.measures))
+        aggs = []
+        for out, (kind, expr) in self.measures.items():
+            if kind not in KINDS:
+                raise ValueError(f"non-decomposable agg in MV: {kind}")
+            aggs.append(F.expr(KINDS[kind][0].format(src=expr)).alias(out))
+        if self.sets is None:
+            return base.groupBy(*self.keys).agg(*aggs)
+        if not all(set(s) <= set(self.keys) for s in self.sets):
+            raise ValueError(f"MV {self.name!r}: a declared set is not a "
+                             "subset of its keys")
+        return (base.groupingSets([list(s) for s in self.sets], *self.keys)
+                .agg(F.grouping_id().alias("grouping_id"), *aggs))
 
     def store(self, base: DataFrame, path: str) -> None:
         """Materialize to parquet (the batch refresh; streaming refresh is
-        streaming/incremental.py feeding the same path). Versioned + atomic
-        pointer swap: see ``commit_versioned``."""
-        commit_versioned(
-            lambda d: self.build(base).write.mode("overwrite").parquet(d),
-            path)
+        streaming/incremental.py feeding the same layout). Versioned +
+        atomic pointer swap: see ``commit_versioned``."""
+        def write(d: str) -> None:
+            w = self.build(base).write.mode("overwrite")
+            if self.sets is not None:
+                w = w.partitionBy("grouping_id")
+            w.parquet(d)
+        commit_versioned(write, path)
 
 
 @dataclass(frozen=True)
@@ -181,23 +245,6 @@ def _expr_refs_only(expr: str, allowed) -> bool:
     return True
 
 
-def _measure_aggs(measures: dict[str, tuple[str, str]]) -> list:
-    """The storage-side aggregate list shared by MVDef and GroupingSetMV."""
-    aggs = []
-    for out, (agg, expr) in measures.items():
-        if agg == "count":
-            aggs.append(
-                (F.count(F.lit(1)) if expr == "*"
-                 else F.count(F.expr(expr))).alias(out))
-        elif agg == "sum":
-            aggs.append(F.sum(F.expr(expr).cast(_DEC)).alias(out))
-        elif agg in ("min", "max"):
-            aggs.append(getattr(F, agg)(F.expr(expr)).alias(out))
-        else:
-            raise ValueError(f"non-decomposable agg in MV: {agg}")
-    return aggs
-
-
 def _derivable(req_measures: dict, stored_measures: dict,
                stored_keys=()) -> bool:
     """Can every requested measure be derived from the stored ones? The
@@ -224,109 +271,60 @@ def _derivable(req_measures: dict, stored_measures: dict,
     return True
 
 
-def _routable(req: AggRequest, mv: MVDef) -> bool:
-    for name, expr in req.keys.items():
-        if expr is None:
-            if name not in mv.keys:
-                return False
-        elif not _expr_refs_only(expr, set(mv.keys)):
-            return False
-    return _derivable(req.measures, mv.measures, mv.keys)
+def _answer(df: DataFrame, req: AggRequest, stored: dict | None,
+            exact: bool) -> DataFrame:
+    """Serve ``req`` from ``df``: base rows when ``stored`` is None, else
+    one grain's rows, ``stored`` mapping (kind, expr) -> stored column. A
+    measure is its kind's partial over base rows, its merge over grain
+    rows, or — at an ``exact`` grain, which is projected, never
+    aggregated — the stored column itself; one output cast follows."""
+    def value(kind: str, expr: str):
+        if stored is None:
+            return F.expr(KINDS[kind][0].format(src=expr))
+        col = stored[(kind, expr)]
+        return F.col(col) if exact else F.expr(KINDS[kind][1].format(c=col))
 
-
-def _answer_from_mv(mv_df: DataFrame, req: AggRequest, mv: MVDef) -> DataFrame:
-    keys = [
-        (F.col(name) if expr is None else F.expr(expr)).alias(name)
-        for name, expr in req.keys.items()
-    ]
-    stored = {(agg, expr): out for out, (agg, expr) in mv.measures.items()}
-    aggs = []
+    keys = [(F.col(name) if expr is None else F.expr(expr)).alias(name)
+            for name, expr in req.keys.items()]
+    measures = []
     for out, (agg, expr) in req.measures.items():
         if agg == "count_distinct":
-            # expr is an MV grain KEY (gated by _derivable): the grain
-            # rows carry every distinct base combination, so a distinct
-            # count over them equals the base's
-            aggs.append(F.countDistinct(F.col(expr))
-                        .cast("bigint").alias(out))
-        elif agg == "count":
-            aggs.append(F.sum(F.col(stored[("count", expr)]))
-                        .cast("bigint").alias(out))
-        elif agg == "sum":
-            aggs.append(
-                F.sum(F.col(stored[("sum", expr)])).cast("double").alias(out))
+            # from a grain, expr is a grain column (gated by _derivable):
+            # the grain rows carry every distinct base combination, so a
+            # distinct count over them equals the base's
+            m = F.countDistinct(F.expr(expr)).cast("bigint")
         elif agg == "avg":
-            aggs.append(
-                (F.sum(F.col(stored[("sum", expr)])).cast("double")
-                 / F.sum(F.col(stored[("count", expr)]))).alias(out))
+            m = value("sum", expr).cast("double") / value("count", expr)
         else:
-            aggs.append(getattr(F, agg)(F.col(stored[(agg, expr)])).alias(out))
-    return mv_df.groupBy(*keys).agg(*aggs)
-
-
-def _answer_from_base(base: DataFrame, req: AggRequest) -> DataFrame:
-    keys = [
-        (F.col(name) if expr is None else F.expr(expr)).alias(name)
-        for name, expr in req.keys.items()
-    ]
-    aggs = []
-    for out, (agg, expr) in req.measures.items():
-        if agg == "count":
-            aggs.append(
-                (F.count(F.lit(1)) if expr == "*"
-                 else F.count(F.expr(expr))).alias(out))
-        elif agg == "count_distinct":
-            aggs.append(F.countDistinct(F.expr(expr))
-                        .cast("bigint").alias(out))
-        elif agg == "sum":
-            aggs.append(
-                F.sum(F.expr(expr).cast(_DEC)).cast("double").alias(out))
-        elif agg == "avg":
-            aggs.append(
-                (F.sum(F.expr(expr).cast(_DEC)).cast("double")
-                 / F.count(F.expr(expr))).alias(out))
-        else:
-            aggs.append(getattr(F, agg)(F.expr(expr)).alias(out))
-    return base.groupBy(*keys).agg(*aggs)
+            m = value(agg, expr)
+            if agg in _OUT:
+                m = m.cast(_OUT[agg])
+        measures.append(m.alias(out))
+    if exact:
+        return df.select(*keys, *measures)
+    return df.groupBy(*keys).agg(*measures)
 
 
 def stored_rows(path: str) -> int:
-    """Total stored rows of a materialized summary from parquet FOOTER
+    """Total stored rows of a materialized summary (a committed version
+    directory, or one grain's partition of it) from parquet FOOTER
     metadata only — the planner's cost signal. No Spark job, no data read;
-    at 100 TB this is a handful of footer fetches per candidate MV.
-    ``path`` is the COMMITTED version directory (resolve first).
-
-    Files under a ``v<N>`` first-level subdirectory are excluded: when
-    ``path`` is a legacy in-place root (resolved via _SUCCESS) that also
-    holds junk version dirs from a crashed first versioned refresh,
-    ``spark.read.parquet(path)`` reads only the root files, so counting
-    the junk would inflate the cost signal and could misroute to a more
-    expensive MV (ADVICE r05 item 5). A committed version dir never
-    nests another ``v<N>``, so the exclusion is a no-op there.
+    at 100 TB this is a handful of footer fetches per candidate grain.
 
     Memoized on (path, directory mtime): committed version dirs are
-    copy-on-write (immutable → permanent hit), while a legacy in-place
-    root rewritten by a refresh changes its mtime and re-counts — without
-    the memo every aggregate() call on the serving hot path re-paid a
-    recursive glob plus a footer read per file per candidate MV."""
-    import glob as _glob
-    import os as _os
-    import re as _re
-
+    copy-on-write (immutable → permanent hit) — without the memo every
+    aggregate() call on the serving hot path re-paid a recursive glob plus
+    a footer read per file per candidate."""
     import pyarrow.parquet as pq
 
     try:
-        key = (path, _os.stat(path).st_mtime_ns)
+        key = (path, os.stat(path).st_mtime_ns)
     except OSError:
         key = None
-    if key is not None and key in _STORED_ROWS_CACHE:
+    if key in _STORED_ROWS_CACHE:
         return _STORED_ROWS_CACHE[key]
-    total = 0
-    for f in _glob.glob(_os.path.join(path, "**", "*.parquet"),
-                        recursive=True):
-        first = _os.path.relpath(f, path).split(_os.sep)[0]
-        if _re.fullmatch(r"v\d+", first):
-            continue
-        total += pq.ParquetFile(f).metadata.num_rows
+    total = sum(pq.ParquetFile(f).metadata.num_rows for f in glob.glob(
+        os.path.join(path, "**", "*.parquet"), recursive=True))
     if key is not None:
         _STORED_ROWS_CACHE[key] = total
     return total
@@ -341,126 +339,43 @@ def route(
     mvs: dict[str, tuple[MVDef, str]],
     base: DataFrame,
 ) -> tuple[DataFrame, str | None]:
-    """Answer ``req`` from the CHEAPEST compatible MV — fewest stored rows
-    per footer metadata; a monthly-grain summary beats a daily one for a
-    yearly rollup — else the base table. ``mvs`` maps name -> (def,
-    parquet path). Returns (result, mv_name-or-None). An MV with no
-    COMMITTED version (mid-refresh crash, never refreshed) is simply not
-    a candidate — base fallback, never a partial read."""
+    """Answer ``req`` from the best declared grain of the summaries in
+    ``mvs`` (name -> (def, parquet path)), else from ``base``. Returns
+    (result, mv_name-or-None).
+
+    A grain is a candidate when every request key is a grain column or an
+    expression over grain columns only, and every measure is derivable
+    (distinct counts from the grain's columns). An EXACT grain — plain
+    keys equal to the grain, no distinct count — is a filter plus a
+    projection and beats any grain that re-aggregates; otherwise the
+    grain with the fewest stored rows wins (footer metadata; a monthly
+    grain beats a daily one for a yearly rollup), then the lower name. A
+    summary with no COMMITTED version (mid-refresh crash, never
+    refreshed) is simply not a candidate — base fallback, never a partial
+    read."""
+    distinct = any(a == "count_distinct" for a, _ in req.measures.values())
+    plain = all(e is None for e in req.keys.values())
     candidates = []
     for name, (mv, path) in mvs.items():
-        if not _routable(req, mv):
-            continue
-        committed = resolve_mv_path(path)
+        grains = [g for g in mv.grains
+                  if all(n in g if e is None else _expr_refs_only(e, set(g))
+                         for n, e in req.keys.items())
+                  and _derivable(req.measures, mv.measures, g)]
+        committed = resolve_mv_path(path) if grains else None
         if committed is None:
             continue
-        candidates.append((stored_rows(committed), name, mv, committed))
-    if candidates:
-        _, name, mv, committed = min(candidates, key=lambda c: (c[0], c[1]))
-        return _answer_from_mv(spark.read.parquet(committed), req, mv), name
-    return _answer_from_base(base, req), None
-
-
-@dataclass(frozen=True)
-class GroupingSetMV:
-    """One summary, many grains: the aggregate-navigator form of a
-    materialized view. The stored table is GROUP BY CUBE over ``keys``
-    restricted to the declared ``sets``, with ``grouping_id`` kept as the
-    grain discriminator — so a real NULL key value can never be confused
-    with an aggregated-away key (the classic grouping-sets-MV trap).
-
-    Serving an EXACT declared grain is a pure ``grouping_id = mask`` filter
-    + projection — NO re-aggregation, no shuffle (plan-pinned in
-    tests/test_mv.py). A coarser request re-aggregates from the coarsest
-    (cheapest) declared grain that covers it, same algebra as ``MVDef``.
-
-    100 TB design: the cube build is one pass with Spark's Expand (rows ×
-    |sets| after the mask filter); storage is Σ per-grain group counts.
-    Partition the stored parquet BY grouping_id so grain serving prunes to
-    its own files.
-    """
-
-    name: str
-    keys: tuple[str, ...]
-    sets: tuple[tuple[str, ...], ...]
-    measures: dict[str, tuple[str, str]] = field(hash=False)
-
-    def mask(self, subset: tuple[str, ...]) -> int:
-        """Spark/ANSI grouping_id: bit per key, FIRST key = MSB; bit set =
-        key aggregated away."""
-        m = 0
-        for k in self.keys:
-            m = (m << 1) | (0 if k in subset else 1)
-        return m
-
-    def build(self, base: DataFrame) -> DataFrame:
-        cube = (
-            base.cube(*[F.col(k) for k in self.keys])
-            .agg(F.grouping_id().alias("grouping_id"),
-                 *_measure_aggs(self.measures))
-        )
-        masks = [self.mask(s) for s in self.sets]
-        return cube.filter(F.col("grouping_id").isin(masks))
-
-    def store(self, base: DataFrame, path: str) -> None:
-        commit_versioned(
-            lambda d: (self.build(base).write.mode("overwrite")
-                       .partitionBy("grouping_id").parquet(d)),
-            path)
-
-    def answer(self, spark: SparkSession, path: str,
-               req: AggRequest) -> DataFrame | None:
-        """Serve ``req`` whose keys are plain columns drawn from ``keys``:
-        exact declared grain -> filter+project (zero aggregation); coarser
-        than some declared grain -> re-aggregate from the coarsest
-        (cheapest) covering grain; otherwise None — including when no
-        refresh has ever COMMITTED (a partial write is never served)."""
-        if any(expr is not None for expr in req.keys.values()):
-            return None
-        want = tuple(req.keys)
-        if not set(want) <= set(self.keys):
-            return None
-        # count_distinct(x) is structural, not measure-algebraic: it
-        # needs a declared grain whose key set holds BOTH the requested
-        # keys and x (the grain rows enumerate the distinct base
-        # combinations), and it always re-aggregates — the exact-grain
-        # pure-filter fast path cannot serve it from stored columns
-        dcols = {e for _, (a, e) in req.measures.items()
-                 if a == "count_distinct"}
-        if not _derivable(req.measures, self.measures,
-                          set(self.keys) if dcols else ()):
-            return None
-        committed = resolve_mv_path(path)
-        if committed is None:
-            return None
-        stored = {(agg, expr): out for out, (agg, expr) in self.measures.items()}
-        mv_df = spark.read.parquet(committed)
-        exact = None if dcols else next(
-            (s for s in self.sets if set(s) == set(want)), None)
-        if exact is not None:
-            sel = [F.col(k) for k in want]
-            for out, (agg, expr) in req.measures.items():
-                if agg == "count":
-                    sel.append(F.col(stored[("count", expr)]).cast("bigint")
-                               .alias(out))
-                elif agg == "sum":
-                    sel.append(F.col(stored[("sum", expr)]).cast("double")
-                               .alias(out))
-                elif agg == "avg":
-                    sel.append((F.col(stored[("sum", expr)]).cast("double")
-                                / F.col(stored[("count", expr)])).alias(out))
-                else:
-                    sel.append(F.col(stored[(agg, expr)]).alias(out))
-            return (mv_df.filter(F.col("grouping_id") == self.mask(exact))
-                    .select(*sel))
-        covering = [s for s in self.sets if set(want) | dcols <= set(s)]
-        if not covering:
-            return None
-        # the COARSEST covering grain (fewest keys) has the fewest stored
-        # rows to fold — cheapest correct source (any covering grain gives
-        # the same answer; this picks the smallest scan)
-        coarsest = min(covering, key=len)
-        sub = MVDef(self.name, coarsest, self.measures)
-        return _answer_from_mv(
-            mv_df.filter(F.col("grouping_id") == self.mask(coarsest)),
-            req, sub)
+        for g in grains:
+            exact = plain and not distinct and set(req.keys) == set(g)
+            files = committed if mv.sets is None else os.path.join(
+                committed, f"grouping_id={mv.mask(g)}")
+            candidates.append((not exact, stored_rows(files), name, g, mv,
+                               committed))
+    if not candidates:
+        return _answer(base, req, None, False), None
+    inexact, _, name, grain, mv, committed = min(
+        candidates, key=lambda c: c[:3])
+    df = spark.read.parquet(committed)
+    if mv.sets is not None:
+        df = df.filter(F.col("grouping_id") == mv.mask(grain))
+    stored = {m: out for out, m in mv.measures.items()}
+    return _answer(df, req, stored, not inexact), name

@@ -1495,12 +1495,12 @@ def q251(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# Q254 grain navigator served from a grouping-sets MV: ONE stored summary
-# (CUBE restricted to declared grains, grouping_id kept) answers the
-# returnflag grain as a pure filter+projection — no re-aggregation, no
-# exchange (plan-pinned in test_mv/test_plans). Oracle is the direct
-# base-table aggregate, so the hash match certifies the multi-grain
-# storage + mask addressing end to end.
+# Q254 grain navigator served from a multi-grain summary: ONE stored
+# summary (a groupingSets pass over the declared grains, grouping_id kept)
+# answers the returnflag grain as a pure filter+projection — no
+# re-aggregation, no exchange (plan-pinned in test_mv/test_plans). Oracle
+# is the direct base-table aggregate, so the hash match certifies the
+# multi-grain storage + mask addressing end to end.
 @query(
     "q254_grain_navigator",
     oracle="""
@@ -1513,15 +1513,15 @@ def q251(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag
     """,
     doc="Per-returnflag rollup answered from the (ship_day, returnflag) "
-        "grouping-sets summary's exact (returnflag) grain — filter + "
+        "multi-grain summary's exact (returnflag) grain — filter + "
         "projection serving, zero aggregation in the plan.",
 )
 def q254(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from inspectadb_spark.operators.mv import AggRequest, GroupingSetMV
+    from inspectadb_spark.operators.mv import AggRequest, MVDef, route
 
     li = tables(spark, sf_dir)["lineitem"]
     base = li.withColumn("ship_day", F.date_trunc("day", F.col("l_shipdate")))
-    gs = GroupingSetMV(
+    gs = MVDef(
         name="gs_lineitem",
         keys=("ship_day", "l_returnflag"),
         sets=(("ship_day", "l_returnflag"), ("l_returnflag",), ()),
@@ -1539,8 +1539,8 @@ def q254(spark: SparkSession, sf_dir: str) -> DataFrame:
                   "sum_qty": ("sum", "l_quantity"),
                   "avg_qty": ("avg", "l_quantity")},
     )
-    out = gs.answer(spark, path, req)
-    assert out is not None, "declared grain must serve from the summary"
+    out, used = route(spark, req, {gs.name: (gs, path)}, base)
+    assert used == gs.name, "declared grain must serve from the summary"
     return (
         out.withColumn("avg_qty",
                        F.round(F.col("avg_qty").cast("decimal(18,6)"), 4)

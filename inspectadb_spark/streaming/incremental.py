@@ -6,9 +6,11 @@ hypertable-rollup pattern: queries read the (tiny) aggregate table instead
 of rescanning the raw stream history.
 
 Only decomposable aggregates are supported, because only they merge by
-re-aggregation: count (merge: sum), sum (sum — routed through
-DECIMAL(18,6) so merge order can never change the value), min (min),
-max (max). avg is derived as sum/count in the reader view, never stored.
+re-aggregation: the measure kinds are ``operators/mv.py``'s ``KINDS``, the
+vocabulary summary tables are built and re-aggregated from — count
+(merge: sum), sum (sum — routed through DECIMAL(18,6) so merge order can
+never change the value), sum12, min (min), max (max), set (union). avg is
+derived as sum/count in the reader view, never stored.
 
 State versions commit through ``versioned.commit_versioned`` (the same
 crash story as ``StreamingCdcApply``); on a transactional table format the
@@ -32,31 +34,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from inspectadb_spark.operators.mv import KINDS
 from inspectadb_spark.versioned import commit_versioned, read_current
-
-# kind -> (partial agg sql over source expr, merge agg sql over partial col)
-_KINDS = {
-    "count": ("COUNT({src})", "SUM({c})"),
-    "sum": ("SUM(CAST({src} AS DECIMAL(18,6)))", "SUM({c})"),
-    # 12dp exact sum: for products of two 6dp-quantized quantities (e.g.
-    # the p² / p·y calibration moments of q324 / S46), whose exact value
-    # carries 12 decimal places — the 6dp "sum" kind would silently
-    # round each term. DECIMAL(38,12) leaves 26 integer digits, so the
-    # additive merge cannot overflow at any realistic state size.
-    "sum12": ("SUM(CAST({src} AS DECIMAL(38,12)))", "SUM({c})"),
-    "min": ("MIN({src})", "MIN({c})"),
-    "max": ("MAX({src})", "MAX({c})"),
-    # distinct-set union: partial = this batch's distinct values, merge =
-    # dedup'd union of stored set and batch set. Mergeable like a sketch
-    # but exact; state per group is the distinct-value set, so use it for
-    # bounded-cardinality domains (the incremental inverted-index /
-    # audience-membership pattern). Stored sorted so state bytes are
-    # canonical across merge orders.
-    "set": (
-        "array_sort(collect_set({src}))",
-        "array_sort(array_distinct(flatten(collect_list({c}))))",
-    ),
-}
 
 
 class IncrementalAggregate:
@@ -74,7 +53,7 @@ class IncrementalAggregate:
         measures: list[tuple[str, str, str]],
     ) -> None:
         for _, kind, _ in measures:
-            if kind not in _KINDS:
+            if kind not in KINDS:
                 raise ValueError(f"non-decomposable aggregate kind: {kind!r}")
         self.spark = spark
         self.state_dir = state_dir
@@ -132,7 +111,7 @@ class IncrementalAggregate:
         # would duplicate any key that is itself a plain column reference)
         keys = [F.expr(e).alias(a) for a, e in self.key_exprs.items()]
         aggs = [
-            F.expr(_KINDS[kind][0].format(src=src)).alias(alias)
+            F.expr(KINDS[kind][0].format(src=src)).alias(alias)
             for alias, kind, src in self.measures
         ]
         return batch.groupBy(*keys).agg(*aggs)
@@ -142,7 +121,7 @@ class IncrementalAggregate:
         The default re-aggregates each decomposable measure; sketch
         subclasses override this with their own lossless merge."""
         merges = [
-            F.expr(_KINDS[kind][1].format(c=alias)).alias(alias)
+            F.expr(KINDS[kind][1].format(c=alias)).alias(alias)
             for alias, kind, _ in self.measures
         ]
         return merged_in.groupBy(*self.key_exprs).agg(*merges)

@@ -36,6 +36,17 @@ def parse(spark):
     return lambda text: parse_routable(spark, text)
 
 
+# star-grain summaries the star tests register (re-registering the same
+# definition is allowed, so each test can declare what it needs)
+MV_ORDERS_BY_CUST = MVDef(
+    name="mv_orders_by_cust", keys=("o_custkey",),
+    measures={"sum_tp": ("sum", "o_totalprice"), "cnt": ("count", "*"),
+              "cnt_tp": ("count", "o_totalprice")})
+MV_LI_PART_SUPP = MVDef(
+    name="mv_li_part_supp", keys=("l_partkey", "l_suppkey"),
+    measures={"sum_ep": ("sum", "l_extendedprice"), "cnt": ("count", "*"),
+              "cnt_ep": ("count", "l_extendedprice")})
+
 REQ = AggRequest(
     keys={"o_orderstatus": None},
     measures={"total": ("sum", "o_totalprice"), "n": ("count", "*"),
@@ -181,11 +192,9 @@ def test_apply_changes_upsert_delete_and_invalidation(spark,
 
 
 def test_grouping_mv_serves_exact_grain_first(spark, tmp_path_factory):
-    from inspectadb_spark.operators.mv import GroupingSetMV
-
     eng = Engine(spark, SF_DIR, str(tmp_path_factory.mktemp("eng3")))
-    eng.register_grouping_mv(
-        GroupingSetMV(
+    eng.register_mv(
+        MVDef(
             name="gs_orders",
             keys=("o_orderstatus", "o_orderpriority"),
             sets=(("o_orderstatus", "o_orderpriority"),
@@ -491,12 +500,7 @@ def test_sql_routed_star_join(engine):
     re-aggregation is hash-equal to direct Spark SQL with the fact table
     never scanned. Refuse-by-default: no MV declaring the denormalized
     key set -> plain SQL."""
-    engine.register_mv(
-        MVDef(name="mv_orders_by_cust", keys=("o_custkey",),
-              measures={"sum_tp": ("sum", "o_totalprice"),
-                        "cnt": ("count", "*"),
-                        "cnt_tp": ("count", "o_totalprice")}),
-        "orders")
+    engine.register_mv(MV_ORDERS_BY_CUST, "orders")
     routed, prov = engine.sql_routed(
         "SELECT c.c_mktsegment, SUM(o.o_totalprice) AS total, "
         "COUNT(*) AS n, AVG(o.o_totalprice) AS avg_price "
@@ -614,6 +618,9 @@ def test_star_route_serves_post_change_values(spark, tmp_path_factory):
 def test_star_route_refuses_ambiguous_dim_attr_name(engine, parse):
     """A dim attr named like a fact grain column would make the post-join
     groupBy ambiguous — the route refuses and plain SQL serves it."""
+    # the (o_custkey) grain is declared, so each refusal below is the
+    # check it names, not a missing summary
+    engine.register_mv(MV_ORDERS_BY_CUST, "orders")
     df, prov = engine.sql_routed(
         "SELECT c.c_custkey, SUM(o.o_totalprice) AS total "
         "FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey "
@@ -698,12 +705,7 @@ def test_sql_routed_star2_join(engine):
     identically in the joined-then-aggregated and aggregated-then-
     joined forms, so the routed result hash-equals direct Spark SQL
     and the fact table is never scanned."""
-    engine.register_mv(
-        MVDef(name="mv_li_part_supp", keys=("l_partkey", "l_suppkey"),
-              measures={"sum_ep": ("sum", "l_extendedprice"),
-                        "cnt": ("count", "*"),
-                        "cnt_ep": ("count", "l_extendedprice")}),
-        "lineitem")
+    engine.register_mv(MV_LI_PART_SUPP, "lineitem")
     routed, prov = engine.sql_routed(
         "SELECT p.p_brand, s.s_nationkey, SUM(l.l_extendedprice) AS rev, "
         "COUNT(*) AS n, AVG(l.l_extendedprice) AS avg_ep "
@@ -745,6 +747,9 @@ def test_star2_refusals(engine, parse):
     """Two-dim star refuse-by-default: undeclared key set -> plain SQL;
     fact-side WHERE, dim-dim ON terms and fact-side grain/attr name
     collisions never route."""
+    # the (l_partkey, l_suppkey) grain is declared, so each refusal below
+    # is the check it names, not a missing summary
+    engine.register_mv(MV_LI_PART_SUPP, "lineitem")
     # no MV declares (l_orderkey, l_suppkey) on this engine: plain SQL
     _, prov = engine.sql_routed(
         "SELECT o.o_orderstatus, s.s_nationkey, COUNT(*) AS n "
@@ -947,17 +952,110 @@ def test_routed_sql_preserves_select_list_order(engine, spark):
 
 def test_mv_name_collision_across_registries_raises(spark,
                                                     tmp_path_factory):
-    from inspectadb_spark.operators.mv import GroupingSetMV
-
+    """One registry, one storage path per name: a taken name with a
+    different definition (here the same grain declared as a set) raises
+    instead of serving one definition from the other's parquet."""
     eng = Engine(spark, SF_DIR, str(tmp_path_factory.mktemp("engdup")))
     eng.register_mv(
         MVDef(name="dup_name", keys=("o_orderstatus",),
               measures={"n": ("count", "*")}), "orders")
     with pytest.raises(ValueError, match="already registered"):
-        eng.register_grouping_mv(
-            GroupingSetMV(name="dup_name", keys=("o_orderstatus",),
-                          sets=(("o_orderstatus",),),
-                          measures={"n": ("count", "*")}), "orders")
+        eng.register_mv(
+            MVDef(name="dup_name", keys=("o_orderstatus",),
+                  sets=(("o_orderstatus",),),
+                  measures={"n": ("count", "*")}), "orders")
+
+
+def test_star_route_serves_from_multi_grain_summary(spark,
+                                                    tmp_path_factory):
+    """A star aggregate over a fact whose only summary declares several
+    grains routes when one declared set covers the grain keys: the
+    (o_custkey) set serves the grain read, and the rows equal plain SQL."""
+    eng = Engine(spark, SF_DIR, str(tmp_path_factory.mktemp("eng_star_gs")))
+    eng.register_mv(
+        MVDef(name="gs_cust", keys=("o_custkey", "o_orderstatus"),
+              sets=(("o_custkey", "o_orderstatus"), ("o_custkey",), ()),
+              measures={"sum_tp": ("sum", "o_totalprice"),
+                        "cnt": ("count", "*"),
+                        "max_tp": ("max", "o_totalprice")}),
+        "orders")
+    routed, prov = eng.sql_routed(
+        "SELECT c.c_mktsegment, SUM(o.o_totalprice) AS total, "
+        "COUNT(*) AS n, MAX(o.o_totalprice) AS top "
+        "FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey "
+        "GROUP BY c.c_mktsegment")
+    assert prov == "star:gsmv:gs_cust"
+    plain = eng.sql(
+        "SELECT c.c_mktsegment, "
+        "CAST(SUM(CAST(o.o_totalprice AS DECIMAL(18,6))) AS DOUBLE) AS total,"
+        " COUNT(*) AS n, MAX(o.o_totalprice) AS top "
+        "FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey "
+        "GROUP BY c.c_mktsegment")
+    assert _rows(routed) == _rows(plain) and routed.count() > 0
+
+
+def test_mixed_registry_serves_exact_set_and_flat_only_measures(
+        spark, tmp_path_factory):
+    """A flat and a multi-grain summary on one base share one registry:
+    a request at a declared set is projected from the multi-grain summary
+    (its exact grain beats the flat summary's re-aggregation), and a
+    request only the flat summary can derive routes to it."""
+    eng = Engine(spark, SF_DIR, str(tmp_path_factory.mktemp("eng_mixed")))
+    eng.register_mv(
+        MVDef(name="mv_mix_daily", keys=("o_orderdate", "o_orderstatus"),
+              measures={"sum_price": ("sum", "o_totalprice"),
+                        "cnt": ("count", "*")}),
+        "orders")
+    eng.register_mv(
+        MVDef(name="gs_mix", keys=("o_orderstatus", "o_orderpriority"),
+              sets=(("o_orderstatus", "o_orderpriority"),
+                    ("o_orderstatus",), ()),
+              measures={"sum_price": ("sum", "o_totalprice"),
+                        "cnt": ("count", "*")}),
+        "orders")
+    exact, prov = eng.aggregate("orders", AggRequest(
+        keys={"o_orderstatus": None},
+        measures={"total": ("sum", "o_totalprice"), "n": ("count", "*")}),
+        use_cache=False)
+    assert prov == "gsmv:gs_mix"
+    plan = exact._jdf.queryExecution().executedPlan().toString()
+    assert "HashAggregate" not in plan, "exact set = filter + projection"
+    assert _rows(exact) == _rows(eng.sql(
+        "SELECT o_orderstatus, "
+        "CAST(SUM(CAST(o_totalprice AS DECIMAL(18,6))) AS DOUBLE) AS total, "
+        "COUNT(*) AS n FROM orders GROUP BY o_orderstatus"))
+    flat, prov2 = eng.aggregate("orders", AggRequest(
+        keys={"o_orderstatus": None},
+        measures={"n_days": ("count_distinct", "o_orderdate")}),
+        use_cache=False)
+    assert prov2 == "mv:mv_mix_daily"
+    assert _rows(flat) == _rows(eng.sql(
+        "SELECT o_orderstatus, COUNT(DISTINCT o_orderdate) AS n_days "
+        "FROM orders GROUP BY o_orderstatus"))
+
+
+def test_sql_routed_parses_unparseable_text_once(engine):
+    """A text Spark cannot parse raises Spark's ParseException after ONE
+    parse. pyspark logs each captured parse failure at ERROR with its Java
+    trace, so parsing again for plain SQL logged every failure twice."""
+    import logging
+
+    from pyspark.errors import ParseException
+    from pyspark.logger import PySparkLogger
+
+    records = []
+    handler = logging.Handler()
+    handler.emit = records.append
+    logger = PySparkLogger.getLogger("SQLQueryContextLogger")
+    logger.addHandler(handler)
+    try:
+        with pytest.raises(ParseException):
+            engine.sql_routed(
+                "SELECT o_orderstatus, SUM(o_totalprice) AS s FROM orders "
+                "GROUP BY o_orderstatus HAVING s > 1e999")
+    finally:
+        logger.removeHandler(handler)
+    assert len(records) == 1
 
 
 @pytest.fixture(scope="module")

@@ -202,28 +202,28 @@ def test_grouping_set_mv_exact_grain_serves_without_aggregation(
         spark, tmp_path_factory):
     """One summary, many grains: exact-grain requests are a grouping_id
     filter + projection (plan has NO aggregate), coarser requests re-agg
-    from the finest covering grain, and a real NULL key value is never
-    confused with an aggregated-away key."""
-    from inspectadb_spark.operators.mv import GroupingSetMV
-
+    from the cheapest covering grain (fewest stored rows), and a real NULL
+    key value is never confused with an aggregated-away key."""
     base = spark.createDataFrame(
         [("2024-01-01", "A", 1.0), ("2024-01-01", None, 2.0),
          ("2024-01-02", "B", 3.0), ("2024-01-02", "A", 4.0),
          ("2024-01-02", None, 6.0)],
         "day string, flag string, qty double")
-    mv = GroupingSetMV(
+    mv = MVDef(
         name="gs", keys=("day", "flag"),
         sets=(("day", "flag"), ("flag",), ()),
         measures={"sum_qty": ("sum", "qty"), "cnt": ("count", "*"),
                   "cnt_qty": ("count", "qty")})
     path = str(tmp_path_factory.mktemp("gs") / "gs")
     mv.store(base, path)
+    mvs = {mv.name: (mv, path)}
 
     # exact grain (flag): filter+project only — no HashAggregate/Exchange
     req = AggRequest(keys={"flag": None},
                      measures={"sq": ("sum", "qty"), "n": ("count", "*"),
                                "a": ("avg", "qty")})
-    got = mv.answer(spark, path, req)
+    got, used = route(spark, req, mvs, base)
+    assert used == mv.name
     plan = got._jdf.queryExecution().executedPlan().toString()
     assert "HashAggregate" not in plan and "Exchange" not in plan
     rows = {r["flag"]: (r["sq"], r["n"], r["a"]) for r in got.collect()}
@@ -232,20 +232,22 @@ def test_grouping_set_mv_exact_grain_serves_without_aggregation(
     assert rows["A"] == (5.0, 2, 2.5) and rows["B"] == (3.0, 1, 3.0)
 
     # grand total grain
-    tot = mv.answer(spark, path,
-                    AggRequest(keys={}, measures={"n": ("count", "*")}))
-    assert tot.collect()[0]["n"] == 5
+    tot, used = route(
+        spark, AggRequest(keys={}, measures={"n": ("count", "*")}), mvs, base)
+    assert used == mv.name and tot.collect()[0]["n"] == 5
 
     # coarser than (day, flag) but not a declared set: day folds flag away
     day_req = AggRequest(keys={"day": None},
                          measures={"sq": ("sum", "qty")})
-    day = {r["day"]: r["sq"] for r in
-           mv.answer(spark, path, day_req).collect()}
+    day_df, used = route(spark, day_req, mvs, base)
+    assert used == mv.name
+    day = {r["day"]: r["sq"] for r in day_df.collect()}
     assert day == {"2024-01-01": 3.0, "2024-01-02": 13.0}
 
     # underivable measure refuses
-    assert mv.answer(spark, path, AggRequest(
-        keys={"flag": None}, measures={"m": ("min", "qty")})) is None
+    assert route(spark, AggRequest(
+        keys={"flag": None}, measures={"m": ("min", "qty")}),
+        mvs, base)[1] is None
 
 
 def test_avg_and_count_are_null_correct_across_layers(spark,
@@ -347,16 +349,17 @@ def test_mv_refresh_is_versioned_and_crash_safe(spark, base, tmp_path):
 
 
 def test_grouping_mv_answer_requires_committed_version(spark, base, tmp_path):
-    from inspectadb_spark.operators.mv import GroupingSetMV
-
-    gs = GroupingSetMV(name="gs_v", keys=("day", "flag"),
-                       sets=(("day", "flag"), ("flag",)),
-                       measures={"sum_qty": ("sum", "qty")})
+    gs = MVDef(name="gs_v", keys=("day", "flag"),
+               sets=(("day", "flag"), ("flag",)),
+               measures={"sum_qty": ("sum", "qty")})
     path = str(tmp_path / "gs_v")
+    mvs = {gs.name: (gs, path)}
     req = AggRequest(keys={"flag": None}, measures={"s": ("sum", "qty")})
-    assert gs.answer(spark, path, req) is None, "no committed version"
+    assert route(spark, req, mvs, base)[1] is None, "no committed version"
     gs.store(base, path)
-    got = {r["flag"]: r["s"] for r in gs.answer(spark, path, req).collect()}
+    out, used = route(spark, req, mvs, base)
+    assert used == gs.name
+    got = {r["flag"]: r["s"] for r in out.collect()}
     direct = {r["flag"]: r["s"] for r in
               base.groupBy("flag").agg(
                   F.sum(F.col("qty").cast("decimal(18,6)")).cast("double")
@@ -389,38 +392,39 @@ def test_grouping_set_mv_count_distinct_routes_via_covering_grain(
     requested keys AND the distinct column — never the exact-grain
     pure-filter path (stored columns cannot hold a distinct count) —
     and refused when no declared grain covers both."""
-    from inspectadb_spark.operators.mv import GroupingSetMV
-
     base = spark.createDataFrame(
         [("2024-01-01", "A", 1.0), ("2024-01-01", None, 2.0),
          ("2024-01-02", "B", 3.0), ("2024-01-02", "A", 4.0),
          ("2024-01-02", "A", 6.0)],
         "day string, flag string, qty double")
-    mv = GroupingSetMV(
+    mv = MVDef(
         name="gsd", keys=("day", "flag"),
         sets=(("day", "flag"), ("flag",), ()),
         measures={"sum_qty": ("sum", "qty"), "cnt": ("count", "*")})
     path = str(tmp_path_factory.mktemp("gsd") / "gsd")
     mv.store(base, path)
+    mvs = {mv.name: (mv, path)}
 
     # distinct flags per day: needs the (day, flag) grain; NULL flag is
     # excluded by COUNT(DISTINCT) on both forms
     req = AggRequest(keys={"day": None},
                      measures={"nf": ("count_distinct", "flag"),
                                "sq": ("sum", "qty")})
-    got = {r["day"]: (r["nf"], r["sq"]) for r in
-           mv.answer(spark, path, req).collect()}
+    out, used = route(spark, req, mvs, base)
+    assert used == mv.name
+    got = {r["day"]: (r["nf"], r["sq"]) for r in out.collect()}
     assert got == {"2024-01-01": (1, 3.0), "2024-01-02": (2, 13.0)}
 
     # exact-grain request WITH a distinct measure still re-aggregates
     # (and is correct): distinct day per (day, flag) group is 1
     req2 = AggRequest(keys={"flag": None},
                       measures={"nd": ("count_distinct", "day")})
-    got2 = {r["flag"]: r["nd"] for r in
-            mv.answer(spark, path, req2).collect()}
+    out2, used2 = route(spark, req2, mvs, base)
+    assert used2 == mv.name
+    got2 = {r["flag"]: r["nd"] for r in out2.collect()}
     assert got2 == {"A": 2, "B": 1, None: 1}
 
     # refused: a distinct column that is not an MV key at all
-    assert mv.answer(spark, path, AggRequest(
+    assert route(spark, AggRequest(
         keys={"flag": None},
-        measures={"nq": ("count_distinct", "qty")})) is None
+        measures={"nq": ("count_distinct", "qty")}), mvs, base)[1] is None

@@ -1556,7 +1556,8 @@ def test_s34_incremental_state_routes_via_mv(spark, replay_dir, tmp_path):
                   available_now=True)
     q.awaitTermination(300)
     q.stop()
-    state_path = inc._read_ptr()[0]
+    # the state dir's CURRENT pointer resolves like any summary's
+    state_path = inc.state_dir
 
     mv = MVDef(name="inc_hourly", keys=("w", "event_type"),
                measures={"sv": ("sum", "value"), "cnt": ("count", "*"),
@@ -2093,7 +2094,8 @@ def test_s43_incremental_state_serves_star2(spark, replay_dir, tmp_path):
                   available_now=True)
     q.awaitTermination(300)
     q.stop()
-    state_path = inc._read_ptr()[0]
+    # the state dir's CURRENT pointer resolves like any summary's
+    state_path = inc.state_dir
 
     hist = spark.read.parquet(replay_dir)
     dim_u = (hist.select(F.col("user_id").alias("uk")).distinct()
